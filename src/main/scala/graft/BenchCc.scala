@@ -1,15 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.ConnectedComponents
 
 /** Probe for the distributed CC rounds (the at-scale path the pipeline's
-  * driver finisher replaces below its edge bound): measures the
-  * large/small-star iteration on real pipeline edges, with and without an
-  * explicit repartition-by-`u` of each round's output (SURVEY §4 item 2
-  * asks whether pinning the round partitioning stabilizes round times —
-  * the rounds otherwise inherit whatever `distinct()` left).
+  * driver finisher replaces below its edge bound): per-round and total
+  * time of the large/small-star iteration on a deep-chain edge set.
+  * (A repartition-by-`u` of each round's output lost its screen twice —
+  * see BASELINE.md — so only the plain rounds are measured.)
   *
   * Usage: runMain graft.BenchCc [nBase] [reps]
   */
@@ -18,18 +16,7 @@ object BenchCc {
   def main(args: Array[String]): Unit = {
     val nBase = if (args.length > 0) args(0).toLong else 240000L
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (16 * 1024 * 1024).toString)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/tmp"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val spark = Sessions.pipeline(sys.env.getOrElse("GRAFT_MASTER", "local[32]"))
 
     // deterministic chain-structured edge set: components of 16 nodes as
     // paths (≈ the depth structure that makes large/small-star iterate —
@@ -49,12 +36,7 @@ object BenchCc {
     val edges = spark.read.parquet(edgeDir)
     println(s"EDGES ${edges.count()}")
 
-    val n = spark.sessionState.conf.numShufflePartitions
-    def ck(repart: Boolean): (DataFrame, Int) => DataFrame =
-      if (!repart) (df, _) => df.localCheckpoint(false)
-      else (df, _) => df.repartition(n, col("u")).localCheckpoint(false)
-
-    def timeRun(tag: String, repart: Boolean): Double = {
+    def timeRun(tag: String): Double = {
       val t0 = System.nanoTime()
       // per-round wall time: onRound fires right after the fingerprint
       // aggregate that materializes the round, so successive deltas are
@@ -67,18 +49,16 @@ object BenchCc {
         println(f"CC_ROUND $tag%-10s iter=$i edges=$cnt sec=${(now - lastRound) / 1e9}%.2f")
         lastRound = now
       }
-      val out = ConnectedComponents.run(edges, ck(repart), onRound = onRound)
+      val out = ConnectedComponents.run(edges, onRound = onRound)
       out.write.mode("overwrite").format("noop").save()
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       println(f"CC $tag%-10s $sec%.2f s")
       sec
     }
-    timeRun("warmup", repart = false)
-    val plain = (1 to reps).map(_ => timeRun("plain", repart = false)).min
-    val keyed = (1 to reps).map(_ => timeRun("repart-u", repart = false)).min
-    val keyed2 = (1 to reps).map(_ => timeRun("repart-u2", repart = true)).min
-    println(f"CC_RESULT plain=$plain%.2f repart_noop=$keyed%.2f repart_u=$keyed2%.2f")
+    timeRun("warmup")
+    val plain = (1 to reps).map(_ => timeRun("plain")).min
+    println(f"CC_RESULT plain=$plain%.2f")
     spark.stop()
   }
 }

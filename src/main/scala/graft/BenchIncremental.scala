@@ -133,22 +133,7 @@ object BenchIncremental {
     val nBase = if (args.length > 0) args(0).toLong else 100000L
     val cores = if (args.length > 1) args(1).toInt else 32
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", s"local[$cores]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (8 * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/tmp"))
-      // round-5 finding (see BenchPipeline.session): block keys are
-      // ~unique, sort-based map-side partial agg wins at minutes scale
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
-      .config("spark.locality.wait",
-        sys.env.getOrElse("SPARK_GRAFT_LOCALITY_WAIT", "0"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.pipeline(sys.env.getOrElse("GRAFT_MASTER", s"local[$cores]"))
     val r = measure(spark, nBase, reps)
     require(r.parity, "incremental != full recompute")
     println(f"INC_BENCH turns=${r.turns} delta_turns=${r.deltaTurns} " +

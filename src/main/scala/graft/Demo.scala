@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline._
 
 /** End-to-end drive of the record-linkage pipeline from the public API:
@@ -11,10 +10,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val nBase = if (args.length > 0) args(0).toLong else 40L
     val dups = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.pipeline("local[8]")
 
     val t = TranscriptGen.transcripts(spark, nBase, dups)
     println(s"transcripts: ${t.count()} turns, ${nBase * (dups + 1)} conversations")

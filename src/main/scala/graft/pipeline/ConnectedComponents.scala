@@ -108,7 +108,7 @@ object ConnectedComponents {
       // explicitly, joinAttach via coalesce), and a root's cluster id IS
       // itself — so the payload carries only non-root members (~the
       // duplicate docs), typically a third smaller than the full node map
-      val uf = subTimed("collect+uf")(streamingCollectUnion(e))
+      val uf = streamingCollectUnion(e)
       if (uf.nonRootCount <= maxBroadcastNodes) {
         // ship a compact byte blob (names + root ordinals straight from
         // the union-find arrays) and decode it ONCE PER EXECUTOR JVM into
@@ -121,8 +121,8 @@ object ConnectedComponents {
         // would round-trip every row driver → executors → driver — and a
         // sorted-parallel-arrays binary-search variant were both measured
         // worse earlier: +2 s / 1.5 s vs 0.8 s on this sub-phase.)
-        val blob = subTimed("encode")(uf.encodeNonRoots())
-        val bc = subTimed("broadcast")(spark.sparkContext.broadcast(blob))
+        val blob = uf.encodeNonRoots()
+        val bc = spark.sparkContext.broadcast(blob)
         val look = udf(new LookupFn(bc)).asNondeterministic()
         // deterministic in fact; the flag keeps the optimizer from
         // re-executing the lookup across plan branches
@@ -136,35 +136,41 @@ object ConnectedComponents {
   /** Broadcast-blob lookup closure: resolves the decoded map once per
     * TASK (transient lazy), which amortizes the per-JVM decode cache's
     * synchronized access down to one hit per task — the per-row path is a
-    * plain HashMap get.
+    * plain HashMap get. `blobKey` is minted once on the driver and ships
+    * with the closure: broadcast ids restart at 0 in every SparkContext,
+    * so a cache keyed by `bc.id` alone would serve a second context in
+    * the same JVM (or any other blob under a reused id) the first one's
+    * map.
     */
-  private final class LookupFn(bc: org.apache.spark.broadcast.Broadcast[Array[Byte]])
+  private[graft] final class LookupFn(bc: org.apache.spark.broadcast.Broadcast[Array[Byte]])
       extends (String => String) with Serializable {
-    @transient private lazy val m = decodedBlob(bc)
+    private val blobKey = java.util.UUID.randomUUID()
+    @transient private lazy val m = decodedBlob(blobKey, bc)
     override def apply(s: String): String = {
       val v = m.get(s); if (v == null) s else v
     }
   }
 
-  /** Per-JVM cache of decoded assignment blobs, keyed by broadcast id and
-    * bounded to the 2 most recent (back-to-back pipeline runs in one
-    * session must not accrete 10⁶-entry maps per run).
+  /** Per-JVM cache of decoded assignment blobs, keyed by the lookup's
+    * driver-minted blob key and bounded to the 2 most recent
+    * (back-to-back pipeline runs in one session must not accrete
+    * 10⁶-entry maps per run).
     */
   private val blobCache =
-    new java.util.LinkedHashMap[Long, java.util.HashMap[String, String]](8, 0.75f, true) {
+    new java.util.LinkedHashMap[java.util.UUID, java.util.HashMap[String, String]](8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[Long, java.util.HashMap[String, String]]): Boolean =
+          e: java.util.Map.Entry[java.util.UUID, java.util.HashMap[String, String]]): Boolean =
         size() > 2
     }
 
-  private def decodedBlob(
+  private def decodedBlob(key: java.util.UUID,
       bc: org.apache.spark.broadcast.Broadcast[Array[Byte]]): java.util.HashMap[String, String] =
     blobCache.synchronized {
-      val hit = blobCache.get(bc.id)
+      val hit = blobCache.get(key)
       if (hit != null) hit
       else {
         val m = UnionFind.decodeNonRoots(bc.value)
-        blobCache.put(bc.id, m)
+        blobCache.put(key, m)
         m
       }
     }
@@ -219,19 +225,6 @@ object ConnectedComponents {
     }
     if (err.get() != null) throw err.get()
     uf
-  }
-
-  /** Sub-phase timing for the driver finisher (same env switch as the
-    * pipeline's stage timer): the finisher is the pipeline's serial tail,
-    * and per-phase prints are what tells collect vs union-find vs
-    * broadcast apart when attacking it.
-    */
-  private def subTimed[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      println(f"CCSUB $name%-10s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
   }
 
   private def joinAttach(universe: DataFrame, assignment: DataFrame): DataFrame =
@@ -289,7 +282,7 @@ object ConnectedComponents {
     * the root, so the invariant "root = lexicographic min of its
     * component" holds inductively and the output is order-insensitive.
     */
-  private[pipeline] final class UnionFind {
+  private[graft] final class UnionFind {
     private val idOf = new java.util.HashMap[String, Integer](1 << 16)
     private var names = new Array[String](1 << 12)
     private var parent = new Array[Int](1 << 12)
@@ -383,7 +376,7 @@ object ConnectedComponents {
     }
   }
 
-  private[pipeline] object UnionFind {
+  private[graft] object UnionFind {
     /** Decode [[UnionFind.encodeNonRoots]] into the non-root lookup map. */
     def decodeNonRoots(blob: Array[Byte]): java.util.HashMap[String, String] = {
       val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(blob))

@@ -91,21 +91,11 @@ object IncrementalPipeline {
           priorClusters: DataFrame, cfg: Pipeline.Config = Pipeline.Config(),
           priorBlocks: Option[DataFrame] = None): Result = {
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    // per-stage wall-clock into Pipeline.stageTimings under inc_* keys
-    // (GRAFT_STAGE_TIMING prints them like the batch stages)
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Pipeline.stageTimings.put(name, sec)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        println(f"STAGE $name%-14s $sec%.2f s")
-      r
-    }
     // eager checkpoint: the delta docs feed blocking AND the scoring join
-    val newDocs = timed("inc_docs")(Pipeline.docsPayload(newTranscripts, cfg)
-      .localCheckpoint(true, ser))
-    val newBlocks = timed("inc_blocks")(Pipeline.blocksPayload(newDocs, cfg)
-      .localCheckpoint(true, ser))
+    val newDocs = Pipeline.docsPayload(newTranscripts, cfg)
+      .localCheckpoint(true, ser)
+    val newBlocks = Pipeline.blocksPayload(newDocs, cfg)
+      .localCheckpoint(true, ser)
 
     // prune the corpus side to keys the delta emits, then fold the pruned
     // rows STRAIGHT into a bounded distinct-collect per key: one shuffle
@@ -146,13 +136,12 @@ object IncrementalPipeline {
         .as("old_members"))
     // eager: consumed by the drop audit, the kept-new anti-join and the
     // new-old pair join — one row per distinct delta key (delta-sized)
-    val counts = timed("inc_probe")(
-      newBlocks.groupBy("block_key").agg(count(lit(1)).as("n_new"))
-        .join(oldAgg, Seq("block_key"), "left")
-        .select(col("block_key"), col("n_new"),
-          coalesce(size(col("old_members")), lit(0)).cast("long").as("n_old"),
-          col("old_members"))
-        .localCheckpoint(true, ser))
+    val counts = newBlocks.groupBy("block_key").agg(count(lit(1)).as("n_new"))
+      .join(oldAgg, Seq("block_key"), "left")
+      .select(col("block_key"), col("n_new"),
+        coalesce(size(col("old_members")), lit(0)).cast("long").as("n_old"),
+        col("old_members"))
+      .localCheckpoint(true, ser)
     val droppedKeys = counts
       .where(col("n_new") + col("n_old") > cfg.maxBlockSize)
       .select(col("block_key"),
@@ -186,9 +175,9 @@ object IncrementalPipeline {
     // eager: the pair set fans out three ways below (the two pairHids
     // projections + the scoring join) — without materialization the whole
     // block/count/anti-join subtree re-executes per consumer
-    val pairs = timed("inc_pairs")(nnPairs.select("conv_a", "conv_b")
+    val pairs = nnPairs.select("conv_a", "conv_b")
       .unionByName(noPairs)
-      .localCheckpoint(true, ser))
+      .localCheckpoint(true, ser)
 
     // scoring features: prune the corpus docs to ids the pairs actually
     // reference BEFORE the feature-attach joins — the pair set is
@@ -205,17 +194,16 @@ object IncrementalPipeline {
     // semi-join — i.e. the fat priorDocs snapshot (tokh arrays, the
     // run's widest table) is scanned TWICE (the dominant term of the
     // round-5 inc_scored 4.5-5.1 s; guide §7.2 duplicated subtrees)
-    val allDocs = timed("inc_feats")(newDocs.unionByName(
-        priorDocs.select("conv_id", "tokh", "prefix", "hid"))
+    val allDocs = newDocs
+      .unionByName(priorDocs.select("conv_id", "tokh", "prefix", "hid"))
       .join(if (2 * nPairs <= maxBroadcastRows) broadcast(pairHids) else pairHids,
         Seq("hid"), "left_semi")
-      .localCheckpoint(true, ser))
+      .localCheckpoint(true, ser)
     val scored = Scoring.scorePairs(pairs, allDocs, cfg.weights,
       cfg.prefixChars, cfg.levMaxDist, pairIdCol = "hid",
       pruneBelowThreshold = Some(cfg.scoreThreshold))
-    val matched = timed("inc_scored")(
-      Scoring.matchedPairs(scored, cfg.scoreThreshold)
-        .localCheckpoint(true, ser))
+    val matched = Scoring.matchedPairs(scored, cfg.scoreThreshold)
+      .localCheckpoint(true, ser)
 
     // AFFECTED-SUBGRAPH reclustering: only prior clusters touched by a
     // matched edge can change — everything else passes through verbatim.
@@ -239,9 +227,9 @@ object IncrementalPipeline {
       .join(small(matchedIds), Seq("conv_id"), "left_semi")
       .select("cluster_id").distinct()
       .localCheckpoint(false, ser)
-    val affectedMembers = timed("inc_affected")(priorClusters
+    val affectedMembers = priorClusters
       .join(small(affectedClusterIds), Seq("cluster_id"), "left_semi")
-      .localCheckpoint(true, ser))
+      .localCheckpoint(true, ser)
     val unaffected = priorClusters
       .join(small(affectedClusterIds), Seq("cluster_id"), "left_anti")
 

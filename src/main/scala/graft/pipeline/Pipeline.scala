@@ -55,15 +55,14 @@ object Pipeline {
     * [[IncrementalPipeline.retract]] needs to heal clusters after
     * deletions without a corpus-wide relink. Lazy on the in-memory path
     * (a filter over the cached scored stage).
+    *
+    * `stageSeconds`: wall-clock of this run's materialized stages (docs,
+    * pairs, scored, clusters) on the in-memory path; empty under
+    * TableIO — so bench artifacts carry the stage decomposition, not
+    * just the total.
     */
   case class StageResult(clusters: DataFrame, droppedBlocks: DataFrame,
-                         matchedEdges: DataFrame)
-
-  /** Per-stage wall-clock of the most recent non-checkpointed run on this
-    * driver (seconds; reset at run start) — consumed by the bench harness
-    * so BENCH artifacts carry the stage decomposition, not just the total.
-    */
-  val stageTimings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+                         matchedEdges: DataFrame, stageSeconds: Map[String, Double])
 
   /** Run without checkpointing (tests / small inputs). */
   def run(transcripts: DataFrame, cfg: Config = Config()): StageResult =
@@ -136,6 +135,7 @@ object Pipeline {
     // docs/blocks feed multiple consumers (self-joins, both sides of the
     // scoring join), and recomputing an interpreted shingle/minhash tree
     // per consumer multiplies the dominant cost.
+    val stageSeconds = scala.collection.mutable.Map.empty[String, Double]
     def stage(name: String)(build: => DataFrame): DataFrame = io match {
       case Some(t) if t.exists(name) => t.read(name)
       case Some(t) =>
@@ -157,13 +157,9 @@ object Pipeline {
         // thread-level scaling in a single JVM
         val out = build.localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        val sec = (System.nanoTime() - t0) / 1e9
-        stageTimings.put(name, sec)
-        if (sys.env.contains("GRAFT_STAGE_TIMING"))
-          println(f"STAGE $name%-14s $sec%.2f s")
+        stageSeconds(name) = (System.nanoTime() - t0) / 1e9
         out
     }
-    stageTimings.clear()
 
     // narrow payload through the pipeline: tokens + a bounded prefix only
     // (the full turns array / doc_text would be cached and shuffled at
@@ -243,8 +239,6 @@ object Pipeline {
       if (!o.future.isCompleted) None
       else o.get.get("n").map(v => Option(v).fold(0L)(_.asInstanceOf[Number].longValue))
     }
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      println(s"OBS matched_edges=${knownEdges.fold("undelivered")(_.toString)}")
     // edges is a filter+project over the already-materialized scored stage
     // — its own eager checkpoint was a pure extra pass; CC's first
     // distinct materializes it in the same job (TableIO keeps the snapshot
@@ -285,6 +279,6 @@ object Pipeline {
         knownEdgeCount = knownEdges)
     }
 
-    StageResult(clusters, dropped, matchedDf)
+    StageResult(clusters, dropped, matchedDf, stageSeconds.toMap)
   }
 }

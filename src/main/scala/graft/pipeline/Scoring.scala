@@ -100,9 +100,11 @@ object Scoring {
       // string kernels (guide §1.2 step 1 — don't compute what the
       // threshold cut throws away)
       .withColumn("need_str", pruneBelowThreshold match {
-        case Some(t) =>
+        // with no Jaccard weight the guard's division is 0/0 or ±∞ — no
+        // Jaccard value can tell pairs apart, so every pair is scored
+        case Some(t) if w.jaccard > 0 =>
           col("jaccard") >= lit((t - w.jaroWinkler - w.levenshtein) / w.jaccard - 1e-9)
-        case None => lit(true)
+        case _ => lit(true)
       })
       .withColumn("jw", when(col("need_str"),
         jaro_winkler(col("pref_a"), col("pref_b"))).otherwise(0d))

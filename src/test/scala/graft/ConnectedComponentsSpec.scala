@@ -173,4 +173,25 @@ class ConnectedComponentsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 20L -> 10L))
   }
+
+  test("finisher blob cache: a reused broadcast id never serves another blob's map") {
+    // broadcast ids restart at 0 in every SparkContext, so a second
+    // context in the same JVM ships a different blob under an id the
+    // per-JVM decode cache has already seen
+    final class FixedIdBroadcast(id: Long, blob: Array[Byte])
+        extends org.apache.spark.broadcast.Broadcast[Array[Byte]](id) {
+      override protected def getValue(): Array[Byte] = blob
+      override protected def doUnpersist(blocking: Boolean): Unit = ()
+      override protected def doDestroy(blocking: Boolean): Unit = ()
+    }
+    def blob(edges: (String, String)*): Array[Byte] = {
+      val uf = new ConnectedComponents.UnionFind
+      edges.foreach { case (u, v) => uf.add(u, v) }
+      uf.encodeNonRoots()
+    }
+    val first = new ConnectedComponents.LookupFn(new FixedIdBroadcast(0L, blob("a" -> "b")))
+    val second = new ConnectedComponents.LookupFn(new FixedIdBroadcast(0L, blob("x" -> "y")))
+    assert(first("b") == "a" && first("y") == "y")
+    assert(second("y") == "x" && second("b") == "b")
+  }
 }

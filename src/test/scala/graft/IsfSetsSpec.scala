@@ -157,7 +157,7 @@ class IsfSetsSpec extends SparkSpec {
   }
 
   test("Y-ERD set-detector end-to-end: MLMcg+LTR and LTR+LTR strict F1 in band of the reference rows") {
-    val gt = Readers.readYerdTsv(spark, "/root/reference/data/Y-ERD.tsv")
+    val gt = Readers.readYerdTsv(spark, ReferenceFiles.path("data/Y-ERD.tsv"))
     val queries = gt.select(col("qid"), graft.functions.norm_text(col("query")).as("qtext"))
       .distinct()
     val instances = Ltr.yerdCvInstances(gt).localCheckpoint(true)
@@ -182,7 +182,7 @@ class IsfSetsSpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory(s"isf$tag").toString
       Readers.writeErdEval(kept, s"$dir/run")
       val strict = StrictEval.evaluate(spark,
-        "/root/reference/qrels/Y-ERD_elq.qrels", s"$dir/run")
+        ReferenceFiles.path("qrels/Y-ERD_elq.qrels"), s"$dir/run")
       info(f"Y-ERD $tag strict: P=${strict.precision}%.4f R=${strict.recall}%.4f " +
         f"F1=${strict.f1}%.4f (reference row $refF1%.4f)")
       assert(strict.nQueries > 1000)

@@ -65,11 +65,11 @@ class LtrSpec extends SparkSpec {
   }
 
   test("Y-ERD LTR end-to-end: 5-fold session CV, TREC run, MAP in band of the reference LTR row") {
-    val gt = Readers.readYerdTsv(spark, "/root/reference/data/Y-ERD.tsv")
+    val gt = Readers.readYerdTsv(spark, ReferenceFiles.path("data/Y-ERD.tsv"))
     val instances = Ltr.yerdCvInstances(gt).localCheckpoint(true)
 
     // CMNS floor: the same candidates ranked by commonness alone
-    val qrels = TrecEval.readQrels(spark, "/root/reference/qrels/Y-ERD_trec.qrels")
+    val qrels = TrecEval.readQrels(spark, ReferenceFiles.path("qrels/Y-ERD_trec.qrels"))
     def mapOf(scored: org.apache.spark.sql.DataFrame): Double = {
       val ranked = ReferenceOps.rankCandidates(scored, "qid", "entity", "score", 100)
         .select(col("qid"), col("entity"), col("rnk").cast("int").as("rank"), col("score"))
@@ -107,7 +107,7 @@ class LtrSpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("ltrgreedy").toString
     Readers.writeErdEval(members.toDF(), s"$dir2/run")
     val strict = StrictEval.evaluate(spark,
-      "/root/reference/qrels/Y-ERD_elq.qrels", s"$dir2/run")
+      ReferenceFiles.path("qrels/Y-ERD_elq.qrels"), s"$dir2/run")
     info(f"Y-ERD LTR+Greedy strict: P=${strict.precision}%.4f R=${strict.recall}%.4f " +
       f"F1=${strict.f1}%.4f (reference LTR+Greedy row 0.7867)")
     assert(strict.f1 >= 0.7867 - 0.05, f"strict F1 ${strict.f1}%.4f below band")

@@ -95,8 +95,8 @@ class MlmCgSpec extends SparkSpec {
   }
 
   private lazy val erdGt: DataFrame = {
-    val q = Readers.readErdQueries(spark, "/root/reference/data/Trec_beta.query.txt")
-    val ann = Readers.readErdAnnotations(spark, "/root/reference/data/Trec_beta.annotation.txt")
+    val q = Readers.readErdQueries(spark, ReferenceFiles.path("data/Trec_beta.query.txt"))
+    val ann = Readers.readErdAnnotations(spark, ReferenceFiles.path("data/Trec_beta.annotation.txt"))
     q.join(ann, Seq("qid"), "left")
       .select(lit("").as("difficulty"), col("qid"), col("query"),
         col("mention"), col("freebase_id").as("entity"), col("set_id"),
@@ -104,15 +104,15 @@ class MlmCgSpec extends SparkSpec {
   }
 
   test("ERD MLMcg+Greedy on the synthesized fielded corpus: strict F1 in band of 0.7134") {
-    val f1 = mlmcgGreedyF1(erdGt, "/root/reference/qrels/ERD_elq.qrels",
+    val f1 = mlmcgGreedyF1(erdGt, ReferenceFiles.path("qrels/ERD_elq.qrels"),
       "ERD", GreedyTh)
     info(f"reference row $ErdRow%.4f (caveats: gt-derived corpus+dictionary, recall 1.0)")
     assert(f1 >= ErdRow - 0.07, f"ERD MLMcg+Greedy F1 $f1%.4f below band")
   }
 
   test("Y-ERD MLMcg+Greedy on the synthesized fielded corpus: strict F1 in band of 0.7089") {
-    val gt = Readers.readYerdTsv(spark, "/root/reference/data/Y-ERD.tsv")
-    val f1 = mlmcgGreedyF1(gt, "/root/reference/qrels/Y-ERD_elq.qrels",
+    val gt = Readers.readYerdTsv(spark, ReferenceFiles.path("data/Y-ERD.tsv"))
+    val f1 = mlmcgGreedyF1(gt, ReferenceFiles.path("qrels/Y-ERD_elq.qrels"),
       "Y-ERD", GreedyTh)
     info(f"reference row $YerdRow%.4f (caveats: gt-derived corpus+dictionary, recall 1.0)")
     assert(f1 >= YerdRow - 0.07, f"Y-ERD MLMcg+Greedy F1 $f1%.4f below band")

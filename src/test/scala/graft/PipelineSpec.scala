@@ -106,32 +106,56 @@ class PipelineSpec extends SparkSpec {
 
   test("threshold-aware string-kernel prune: matched set identical, hopeless pairs skip the kernels") {
     val cfg = Pipeline.Config()
-    val docs = Pipeline.docsPayload(t, cfg)
-      .localCheckpoint(true)
-    val (pairsDf, _) = Blocking.pairsFromBlocks(
-      Pipeline.blocksPayload(docs, cfg), cfg.maxBlockSize)
-    val pairs = pairsDf.localCheckpoint(true)
-    val plain = Scoring.scorePairs(pairs, docs, cfg.weights, cfg.prefixChars,
-      cfg.levMaxDist, pairIdCol = "hid")
-    val pruned = Scoring.scorePairs(pairs, docs, cfg.weights, cfg.prefixChars,
-      cfg.levMaxDist, pairIdCol = "hid",
-      pruneBelowThreshold = Some(cfg.scoreThreshold))
-    // the threshold cut sees exactly the same matches with the same scores
-    val mPlain = Scoring.matchedPairs(plain, cfg.scoreThreshold)
-    val mPruned = Scoring.matchedPairs(pruned, cfg.scoreThreshold)
-    assert(mPlain.exceptAll(mPruned).isEmpty && mPruned.exceptAll(mPlain).isEmpty)
-    assert(mPlain.count() > 0) // non-vacuous: the fixture has real matches
-    // skipped pairs (jaccard below the guard) read jw = lev = 0 and can
-    // never cross the threshold; surviving pairs carry identical values
-    val guard = (cfg.scoreThreshold - cfg.weights.jaroWinkler -
-      cfg.weights.levenshtein) / cfg.weights.jaccard - 1e-9
-    val skipped = pruned.where(col("jaccard") < guard)
-    assert(skipped.where(col("jw") =!= 0d || col("lev_sim") =!= 0d).isEmpty)
-    assert(skipped.where(col("score") >= cfg.scoreThreshold).isEmpty)
-    val survivorsPlain = plain.where(col("jaccard") >= guard)
-    val survivorsPruned = pruned.where(col("jaccard") >= guard)
-    assert(survivorsPlain.exceptAll(survivorsPruned).isEmpty &&
-      survivorsPruned.exceptAll(survivorsPlain).isEmpty)
+    // second input: no Jaccard weight and t == w_jw + w_lev, where only a
+    // pair with identical prefixes (the twin of the first conversation)
+    // reaches the threshold
+    val first = t.select(min("conv_id")).as[String].head()
+    val twin = t.where($"conv_id" === first).withColumn("conv_id", lit("twin"))
+    val inputs = Seq(
+      (t, cfg.weights, cfg.scoreThreshold),
+      (t.unionByName(twin), Scoring.Weights(jaccard = 0, jaroWinkler = 0.5, levenshtein = 0.5), 1.0))
+    for ((transcripts, w, threshold) <- inputs) {
+      val docs = Pipeline.docsPayload(transcripts, cfg)
+        .localCheckpoint(true)
+      val (pairsDf, _) = Blocking.pairsFromBlocks(
+        Pipeline.blocksPayload(docs, cfg), cfg.maxBlockSize)
+      val pairs = pairsDf.localCheckpoint(true)
+      val plain = Scoring.scorePairs(pairs, docs, w, cfg.prefixChars,
+        cfg.levMaxDist, pairIdCol = "hid")
+      val pruned = Scoring.scorePairs(pairs, docs, w, cfg.prefixChars,
+        cfg.levMaxDist, pairIdCol = "hid",
+        pruneBelowThreshold = Some(threshold))
+      // the threshold cut sees exactly the same matches with the same scores
+      val mPlain = Scoring.matchedPairs(plain, threshold)
+      val mPruned = Scoring.matchedPairs(pruned, threshold)
+      assert(mPlain.exceptAll(mPruned).isEmpty && mPruned.exceptAll(mPlain).isEmpty, w)
+      assert(mPlain.count() > 0, w) // non-vacuous: the input has real matches
+      // skipped pairs (jaccard below the guard) read jw = lev = 0 and can
+      // never cross the threshold; surviving pairs carry identical values
+      val guard =
+        if (w.jaccard > 0) (threshold - w.jaroWinkler - w.levenshtein) / w.jaccard - 1e-9
+        else Double.NegativeInfinity
+      val skipped = pruned.where(col("jaccard") < guard)
+      assert(skipped.where(col("jw") =!= 0d || col("lev_sim") =!= 0d).isEmpty)
+      assert(skipped.where(col("score") >= threshold).isEmpty)
+      val survivorsPlain = plain.where(col("jaccard") >= guard)
+      val survivorsPruned = pruned.where(col("jaccard") >= guard)
+      assert(survivorsPlain.exceptAll(survivorsPruned).isEmpty &&
+        survivorsPruned.exceptAll(survivorsPlain).isEmpty)
+    }
+  }
+
+  test("concurrent runs on one session each report their own stage seconds") {
+    val small = t.where($"conv_id" < "c000000030")
+    val runs = Seq(t, small).map { input =>
+      scala.concurrent.Future(Pipeline.run(input))(scala.concurrent.ExecutionContext.global)
+    }.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    for (r <- runs) {
+      assert(r.stageSeconds.keySet == Set("docs", "pairs", "scored", "clusters"), r.stageSeconds)
+      assert(r.stageSeconds.values.forall(_ >= 0), r.stageSeconds)
+    }
+    assert(runs.map(_.clusters.count()) ==
+      Seq(t, small).map(_.select("conv_id").distinct().count()))
   }
 
   test("checkpointed run resumes from snapshots and is byte-identical") {

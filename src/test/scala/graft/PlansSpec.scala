@@ -1,32 +1,11 @@
 package graft
 
-import graft.plans.{GraftExtensions, Skew}
+import graft.plans.GraftExtensions
 import graft.functions._
 import org.apache.spark.sql.functions._
 
 class PlansSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted equi-join preserves the plain-join result exactly") {
-    val fact = (1 to 500).map(i => (s"k${i % 3}", i)).toDF("key", "v")
-    val dim = Seq(("k0", "a"), ("k1", "b"), ("k2", "c"), ("k9", "z")).toDF("key", "tag")
-    val plain = fact.join(dim, Seq("key")).orderBy("v").collect()
-    val salted = Skew.saltedEquiJoin(fact, dim, "key", 8).orderBy("v").collect()
-    assert(plain.length == salted.length)
-    assert(plain.map(_.toString).sorted.sameElements(salted.map(_.toString).sorted))
-  }
-
-  test("salt-split re-keys hot blocks into bounded sub-blocks and reports them") {
-    val blocks = ((1 to 200).map(i => ("hot", s"c$i")) ++
-      (1 to 5).map(i => ("cold", s"c$i"))).toDF("block_key", "conv_id")
-    val (rekeyed, report) = Skew.saltSplitBlocks(
-      blocks.select(xxhash64($"block_key").as("block_key"), $"conv_id"), 50)
-    val rep = report.collect()
-    assert(rep.length == 1 && rep(0).getAs[Long]("block_size") == 200)
-    val sizes = rekeyed.groupBy("block_key").count().as[(Long, Long)].collect()
-    assert(sizes.map(_._2).max <= 60) // ≈ cap (hash split is approximate)
-    assert(rekeyed.count() == 205)    // no rows lost
-  }
 
   test("jaro_winkler is callable from SQL after install") {
     GraftExtensions.install(spark)
