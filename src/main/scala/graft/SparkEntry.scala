@@ -712,7 +712,7 @@ object SparkEntry {
           to_timestamp(lit("2026-01-01 00:00:00")).as("ts"), col("text"))
       val index = graft.streaming.IncrementalLink.corpusIndex(corpus)
       graft.streaming.IncrementalLink
-        .linkAgainstCorpus(stream, index, threshold = 0.3)
+        .linkAgainstCorpus(stream, index, Pipeline.Config(scoreThreshold = 0.3))
         .select(col("conv_id"), col("corpus_id"),
           round(col("jaccard"), 4).as("jaccard"),
           round(col("jw"), 4).as("jw"),

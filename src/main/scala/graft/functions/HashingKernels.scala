@@ -21,7 +21,8 @@ object HashingKernels {
   /** MinHash signature over k-token shingles, folded straight into `bands`
     * LSH band keys. Semantics mirror
     * `band_keys(minhash_signature(word_shingles(tokens, k), H), B, H/B)`
-    * modulo the hash family (different constants, same S-curve).
+    * (HOF reference forms in the test sources' `ReferenceForms`) modulo
+    * the hash family (different constants, same S-curve).
     */
   private val EmptyLongs = Array.empty[Long]
 

@@ -332,31 +332,4 @@ object SimilarityKernels {
     val union = da + db - inter
     if (union == 0) 0.0 else inter.toDouble / union
   }
-
-  /** 64-bit SimHash over token hashes: bit b of the result is 1 iff the
-    * sum over tokens of (+1 / -1 for bit b of the token's hash) is > 0.
-    * Token hash = xxHash64-compatible via Spark's hash of the UTF8 bytes is
-    * not needed here — any stable 64-bit mix works; we use the same mix in
-    * tests. Used by [[graft.operators.Dedup.simhash]].
-    */
-  def simhash64(tokenHashes: Array[Long]): Long = {
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < tokenHashes.length) {
-      val h = tokenHashes(i)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
 }

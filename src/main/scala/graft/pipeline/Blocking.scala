@@ -36,51 +36,6 @@ object Blocking {
     docs.select(col("conv_id"),
       explode(shingle_hashes(col("tokens"), k, ExactShingleSeed)).as("block_key"))
 
-  /** Winnowed exact-shingle blocking: fingerprints selected by robust
-    * winnowing (window `w`) instead of every distinct shingle — ~w× fewer
-    * (block_key, conv_id) rows into the pair-generation shuffle and ~w×
-    * less cross-block pair redundancy, with a guaranteed shared key for
-    * any shared token run of length ≥ w + k − 1. w = 1 ≡ every shingle.
-    */
-  def winnowedShingleBlocks(docs: DataFrame, k: Int, w: Int): DataFrame =
-    if (w <= 1) exactShingleBlocks(docs, k)
-    else docs.select(col("conv_id"),
-      explode(winnowed_shingle_hashes(col("tokens"), k, w, ExactShingleSeed))
-        .as("block_key"))
-
-  /** Hybrid blocking: union of LSH band keys and exact shingle keys.
-    * LSH gives sub-quadratic candidate generation on near-duplicates; the
-    * exact-shingle side restores recall on heavily-noised pairs whose
-    * shingle-Jaccard sits below the LSH S-curve knee (they still share
-    * individual intact shingles — winnowing keeps that guarantee for any
-    * shared run of ≥ w + k − 1 tokens at a fraction of the key rate). Hot
-    * exact keys are bounded by the downstream block cap, so the union
-    * stays sub-quadratic.
-    *
-    * Plan shape: ONE projection per doc — the two kernel families are
-    * `array_union`ed per row and exploded once. The first cut unioned two
-    * separate explodes, which scanned the cached docs payload TWICE (the
-    * union's branches are independent stages over the same cache) — at
-    * the 6.72M-turn bench input that is an extra full pass over the
-    * run's largest cached table on a bandwidth-bound stage. Key-set
-    * semantics are identical: both kernels dedup per doc, the seed
-    * namespacing keeps the families structurally disjoint, and both emit
-    * nothing for empty token arrays (so the shared `size > 0` guard
-    * drops no key the two-branch plan would have kept).
-    */
-  def hybridBlocks(docs: DataFrame, exactK: Int, lshShingleK: Int,
-                   numHashes: Int, bands: Int, winnowW: Int = 1): DataFrame = {
-    val exactKeys =
-      if (winnowW <= 1) shingle_hashes(col("tokens"), exactK, ExactShingleSeed)
-      else winnowed_shingle_hashes(col("tokens"), exactK, winnowW, ExactShingleSeed)
-    docs
-      .where(size(col("tokens")) > 0)
-      .select(col("conv_id"),
-        explode(array_union(
-          minhash_band_keys(col("tokens"), lshShingleK, numHashes, bands),
-          exactKeys)).as("block_key"))
-  }
-
   /** MinHash-LSH blocking: docs(conv_id, tokens) → (block_key, conv_id).
     * Signature of `numHashes` min-hashes over k-shingles, cut into `bands`
     * band keys (rowsPerBand = numHashes / bands). Two docs share a block
@@ -91,12 +46,10 @@ object Blocking {
   def minhashLshBlocks(docs: DataFrame, shingleK: Int, numHashes: Int,
                        bands: Int): DataFrame = {
     require(numHashes % bands == 0, s"numHashes $numHashes % bands $bands != 0")
-    val r = numHashes / bands
     // native codegen'd kernel: one hash per shingle + long-remix per slot.
     // (The first cut composed transform/aggregate HOFs — interpreted,
     // boxed, and with the signature re-evaluated per band: 20×+ slower and
     // GC-bound. See HashingKernels.)
-    val _ = r
     docs
       .where(size(col("tokens")) > 0)
       .select(col("conv_id"),

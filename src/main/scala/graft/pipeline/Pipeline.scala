@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end record-linkage pipeline (the north rule):
@@ -103,29 +103,62 @@ object Pipeline {
     * what a full run would have computed for the same rows.
     */
   def docsPayload(transcripts: DataFrame, cfg: Config): DataFrame =
-    DocAssembly.assemble(transcripts).select(
-      col("conv_id"),
-      graft.functions.shingle_hashes(col("tokens"), 1, distinct = false)
-        .as("tokh"),
-      substring(col("norm_text"), 1, cfg.prefixChars).as("prefix"),
-      xxhash64(col("conv_id")).as("hid"))
+    textPayload(DocAssembly.assemble(transcripts)
+      .select(col("conv_id"), col("doc_text").as("text")), cfg)
 
-  /** Block keys for a docs payload: (block_key, conv_id = hid). Same keys
-    * regardless of when a doc is ingested — the property incremental
-    * linkage relies on to join a delta's blocks against a prior corpus
-    * snapshot's.
+  /** The docs-stage projection on plain (conv_id, text, ...) rows: `text`
+    * becomes `tokh` (positional 64-bit token hashes), `prefix` (the first
+    * `prefixChars` chars of the normalized text) and `hid`
+    * (xxhash64(conv_id)); every other column passes through. The one
+    * definition of a document's linkage features — [[docsPayload]] and
+    * the streaming linker ([[graft.streaming.IncrementalLink]]) both call
+    * it, so a streamed doc carries the batch doc's exact tokh and prefix.
     */
-  def blocksPayload(docs: DataFrame, cfg: Config): DataFrame = {
-    val blockInput = docs.select(col("hid").as("conv_id"), col("tokh").as("tokens"))
-    cfg.blocking match {
-      case ExactBlocking => Blocking.exactShingleBlocks(blockInput, cfg.shingleK)
-      case LshBlocking =>
-        Blocking.minhashLshBlocks(blockInput, cfg.lshShingleK, cfg.numHashes, cfg.bands)
-      case HybridBlocking =>
-        Blocking.hybridBlocks(blockInput, cfg.shingleK, cfg.lshShingleK,
-          cfg.numHashes, cfg.bands, cfg.winnowWindow)
-    }
+  def textPayload(docs: DataFrame, cfg: Config): DataFrame = {
+    val text = col("text")
+    docs.select(docs.columns.filterNot(_ == "text").map(col).toIndexedSeq ++ Seq(
+      graft.functions.shingle_hashes(graft.functions.tokens(text), 1,
+        distinct = false).as("tokh"),
+      substring(graft.functions.norm_text(text), 1, cfg.prefixChars).as("prefix"),
+      xxhash64(col("conv_id")).as("hid")): _*)
   }
+
+  /** A doc's block keys (array<long>) from its `tokh` under
+    * `cfg.blocking` — the same keys regardless of when or through which
+    * path (batch, delta, stream) a doc is ingested, the property
+    * incremental linkage relies on to join new keys against a prior
+    * corpus snapshot's. Empty for a zero-token doc under every mode.
+    *
+    * Hybrid = LSH band keys ∪ winnowed exact-shingle keys. LSH gives
+    * sub-quadratic candidate generation on near-duplicates; the exact
+    * side restores recall on heavily-noised pairs whose shingle-Jaccard
+    * sits below the LSH S-curve knee (they still share intact shingles —
+    * winnowing keeps that guarantee for any shared run of ≥ w + k − 1
+    * tokens at ~1/w of the key rate; w = 1 is every distinct shingle).
+    * One `array_union` per row, exploded once: unioning two separate
+    * explodes scanned the cached docs payload twice (the branches are
+    * independent stages over the same cache). Both kernels dedup per doc
+    * and the seed namespacing keeps the two families disjoint.
+    */
+  def blockKeys(tokh: Column, cfg: Config): Column = cfg.blocking match {
+    case ExactBlocking =>
+      graft.functions.shingle_hashes(tokh, cfg.shingleK, Blocking.ExactShingleSeed)
+    case LshBlocking =>
+      graft.functions.minhash_band_keys(tokh, cfg.lshShingleK, cfg.numHashes, cfg.bands)
+    case HybridBlocking =>
+      array_union(
+        graft.functions.minhash_band_keys(tokh, cfg.lshShingleK, cfg.numHashes, cfg.bands),
+        graft.functions.winnowed_shingle_hashes(tokh, cfg.shingleK, cfg.winnowWindow,
+          Blocking.ExactShingleSeed))
+  }
+
+  /** Block rows (conv_id = hid, block_key) of a docs payload. Zero-token
+    * docs have no keys under any mode; the filter skips their kernel call.
+    */
+  def blocksPayload(docs: DataFrame, cfg: Config): DataFrame =
+    docs.select(col("hid").as("conv_id"), col("tokh"))
+      .where(size(col("tokh")) > 0)
+      .select(col("conv_id"), explode(blockKeys(col("tokh"), cfg)).as("block_key"))
 
   private def runStages(transcripts: DataFrame, cfg: Config,
                         io: Option[TableIO]): StageResult = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -14,7 +14,7 @@ import graft.functions._
   * normalized prefix. All three stay inside whole-stage codegen.
   *
   * Scale notes: the two joins that attach doc features to pairs shuffle by
-  * conv_id; the feature payload is kept narrow (tokens + a `prefixChars`
+  * conv_id; the feature payload is kept narrow (token hashes + a `prefixChars`
   * slice of the normalized text, never the full turns array). Levenshtein
   * uses the threshold variant — O(maxDist·len), not O(len²) — and both
   * string kernels run on the bounded prefix, so per-pair cost is constant
@@ -25,8 +25,22 @@ object Scoring {
   case class Weights(jaccard: Double = 0.6, jaroWinkler: Double = 0.25,
                      levenshtein: Double = 0.15)
 
-  /** pairs(conv_a, conv_b, ...) × docs(conv_id, tokens[, prefix]) →
-    * scored(conv_a, conv_b, jaccard, jw, lev_sim, score)
+  /** The token verify set of a doc: its distinct token hashes. */
+  def verifySet(tokh: Column): Column = array_distinct(tokh)
+
+  /** The score mixture w_jac·jaccard + w_jw·jw + w_lev·lev_sim over the
+    * `jaccard`, `jw` and `lev_sim` columns — the batch scorer and the
+    * streaming linker both read a pair's score from here.
+    */
+  def score(w: Weights): Column =
+    lit(w.jaccard) * col("jaccard") + lit(w.jaroWinkler) * col("jw") +
+      lit(w.levenshtein) * col("lev_sim")
+
+  /** pairs(conv_a, conv_b, ...) × docs(conv_id, tokh, prefix[, hid]) —
+    * the [[Pipeline.docsPayload]] shape — →
+    * scored(conv_a, conv_b, jaccard, jw, lev_sim, score).
+    * `prefixChars` is not read — the docs' `prefix` is already cut at
+    * `Pipeline.Config.prefixChars`; the parameter stays for its callers.
     *
     * `pruneBelowThreshold`: when the caller only consumes matches at a
     * score threshold t (the pipeline's matchedPairs cut), pairs whose
@@ -60,24 +74,16 @@ object Scoring {
                  prefixChars: Int = 256, levMaxDist: Int = 128,
                  pairIdCol: String = "conv_id",
                  pruneBelowThreshold: Option[Double] = None): DataFrame = {
-    val prefixCol =
-      if (docs.columns.contains("prefix")) col("prefix")
-      else substring(col("norm_text"), 1, prefixChars)
     // token sets carried as distinct 64-bit hashes (array<long>), not
     // strings: the pair joins + repartition ship this payload 3× per pair,
     // and long equality beats string hashing in the intersect kernel —
     // measured 182 s → (see BENCH) on 733k pairs at local-cluster[1,4].
     // Collision risk per pair ≈ |toks|²/2⁶⁵ — immaterial to a ratio.
-    // Docs that already carry positional token hashes (`tokh`, the
-    // pipeline's bandwidth-light payload) just dedup them.
-    val tokSetCol =
-      if (docs.columns.contains("tokh")) array_distinct(col("tokh"))
-      else shingle_hashes(col("tokens"), 1)
     val feat = docs.select(
       col(pairIdCol).as("k"),
       col("conv_id").as("id"),
-      tokSetCol.as("tok_set"),
-      prefixCol.as("prefix"))
+      verifySet(col("tokh")).as("tok_set"),
+      col("prefix"))
 
     val a = feat.select(col("k").as("conv_a"), col("id").as("id_a"),
       col("tok_set").as("tok_a"), col("prefix").as("pref_a"))
@@ -110,9 +116,7 @@ object Scoring {
         jaro_winkler(col("pref_a"), col("pref_b"))).otherwise(0d))
       .withColumn("lev_sim", when(col("need_str"),
         levenshtein_sim(col("pref_a"), col("pref_b"), levMaxDist)).otherwise(0d))
-      .withColumn("score",
-        lit(w.jaccard) * col("jaccard") + lit(w.jaroWinkler) * col("jw") +
-          lit(w.levenshtein) * col("lev_sim"))
+      .withColumn("score", score(w))
       .select(col("id_a").as("conv_a"), col("id_b").as("conv_b"),
         col("jaccard"), col("jw"), col("lev_sim"), col("score"))
   }

@@ -3,14 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.pipeline.Blocking
+import graft.pipeline.{Pipeline, Scoring}
 
 /** Streaming incremental record linkage: the batch pipeline's blocking
   * semantics (hybrid MinHash-LSH + winnowed exact shingles,
-  * [[graft.pipeline.Blocking]]) recast over an unbounded transcript
-  * stream. New conversations are linked against previously-seen ones the
-  * moment they arrive, instead of waiting for the next batch recompute —
-  * the continuous-ingest complement to `Pipeline.run` at 10^12-turn scale
+  * [[graft.pipeline.Pipeline.blockKeys]]) recast over an unbounded
+  * transcript stream. New conversations are linked against
+  * previously-seen ones the moment they arrive, instead of waiting for
+  * the next batch recompute — the continuous-ingest complement to
+  * `Pipeline.run` at 10^12-turn scale
   * (reference analog: the per-query online linking loop of
   * nordlys/erd/app/erd_app.py:60-118, which links one incoming query
   * against a fixed dictionary; here the "dictionary" is the stream's own
@@ -26,14 +27,15 @@ import graft.pipeline.Blocking
   *     window's key count, not the stream's history.
   *   - Pair dedup is watermark-bounded (`dropDuplicatesWithinWatermark`).
   *
-  * Semantics vs batch ([[Blocking.pairsFromBlocks]]): identical pair SET
-  * for any block whose final size stays ≤ cap (verified in
-  * `IncrementalLinkSpec`). Divergence on oversize blocks is inherent to
-  * append-mode streaming: batch drops the whole block retroactively,
-  * while the stream cannot retract pairs emitted before the cap tripped —
-  * the first `maxBlockSize` members' pairs stand, later members are
-  * dropped. Both directions are recall-safe for downstream exact verify
-  * (extra candidates are scored and filtered, as in the batch scorer).
+  * Semantics vs batch ([[graft.pipeline.Blocking.pairsFromBlocks]]):
+  * identical pair SET for any block whose final size stays ≤ cap
+  * (verified in `IncrementalLinkSpec`). Divergence on oversize blocks is
+  * inherent to append-mode streaming: batch drops the whole block
+  * retroactively, while the stream cannot retract pairs emitted before
+  * the cap tripped — the first `maxBlockSize` members' pairs stand, later
+  * members are dropped. Both directions are recall-safe for downstream
+  * exact verify (extra candidates are scored and filtered, as in the
+  * batch scorer).
   */
 object IncrementalLink {
 
@@ -49,41 +51,18 @@ object IncrementalLink {
   /** Per-block state: sorted member ids, collapsed when oversize. */
   case class BlockState(members: List[String], oversize: Boolean)
 
-  /** Stateless block-key derivation — BATCH-IDENTICAL keys: the same
-    * kernels, the same pre-hashed-token (`tokh`) hash family, and the same
-    * [[graft.pipeline.Pipeline.Config]] defaults (exactK=3, lshShingleK=2,
-    * numHashes=96, bands=24, winnowW=8) as
-    * [[graft.pipeline.Pipeline.blocksPayload]]. A key computed here JOINS
-    * a batch `blocks` snapshot for the same document text (the batch
-    * snapshot's member ids are `hid = xxhash64(conv_id)`, not the id
-    * string — map ids accordingly when mixing). Round 4 derived keys by
-    * chain-hashing token STRINGS with different parameter defaults, which
-    * could never join a batch snapshot (silent zero recall if mixed —
-    * ADVICE r4); `IncrementalLinkSpec` now pins key-set equality against
-    * `blocksPayload`.
-    * Input: streaming or batch DataFrame with (conv_id, ts) and either
-    * `tokens: array<string>` or `text: string`.
+  /** Stateless block-key derivation: (conv_id, ts, block_key) rows of
+    * (conv_id, text, ts) docs, streaming or batch. The keys are
+    * [[Pipeline.blockKeys]] of [[Pipeline.textPayload]]'s `tokh` under
+    * `cfg` — the batch `blocks` snapshot's keys for the same document
+    * text by construction, so a key computed here JOINS a
+    * [[Pipeline.blocksPayload]] snapshot (whose member ids are
+    * `hid = xxhash64(conv_id)`, not the id string — map ids accordingly
+    * when mixing). `IncrementalLinkSpec` pins the key-set equality.
     */
-  def blockKeys(docs: DataFrame, exactK: Int = 3, lshShingleK: Int = 2,
-                numHashes: Int = 96, bands: Int = 24,
-                winnowW: Int = 8): DataFrame = {
-    val toks =
-      if (docs.columns.contains("tokens")) col("tokens")
-      else graft.functions.tokens(col("text"))
-    // positional 64-bit token hashes first — the batch docs payload's
-    // `tokh` column (Pipeline.docsPayload), so the kernels below run the
-    // identical hashLong chains the batch blocks snapshot was built from
-    val tokh = graft.functions.shingle_hashes(toks, 1, distinct = false)
-    // array_union dedups (block_key, conv_id) repeats inline — the batch
-    // path gets the same dedup from its bounded-collect aggregate
-    val keys = array_union(
-      graft.functions.minhash_band_keys(tokh, lshShingleK, numHashes, bands),
-      graft.functions.winnowed_shingle_hashes(tokh, exactK, winnowW,
-        Blocking.ExactShingleSeed))
-    docs.where(size(toks) > 0)
-      .select(col("conv_id"), col("ts").cast("timestamp").as("ts"),
-        explode(keys).as("block_key"))
-  }
+  def blockKeys(docs: DataFrame, cfg: Pipeline.Config = Pipeline.Config()): DataFrame =
+    features(docs, cfg)
+      .select(col("conv_id"), col("ts").cast("timestamp").as("ts"), col("block_key"))
 
   /** Stateful incremental pair emission. Each arriving member pairs with
     * every member already in its block's state (canonical a < b), then
@@ -203,55 +182,42 @@ object IncrementalLink {
   // buckets), the stream pays one narrow join per micro-batch.
   // --------------------------------------------------------------------
 
-  /** Per-doc linkage features: the scoring payload of
-    * [[graft.pipeline.Scoring.scorePairs]] (distinct 64-bit token hashes +
-    * a bounded normalized prefix) plus one row per hybrid block key.
+  /** Per-doc linkage features of (conv_id, text, ...) docs: every input
+    * column but `text`, the scoring payload of
+    * [[graft.pipeline.Scoring.scorePairs]] (`tok_set` = the verify set of
+    * the doc's `tokh`, and the bounded normalized `prefix`), and one row
+    * per block key. Zero-token docs have no keys, hence no rows.
     */
-  /** package-visible so [[graft.Verify]] can export the exact stream-side
-    * feature rows (tok_set, prefix, block_key) the q53 oracle replays
+  private def features(docs: DataFrame, cfg: Pipeline.Config): DataFrame =
+    Pipeline.textPayload(docs, cfg).where(size(col("tokh")) > 0)
+      .select(docs.columns.filterNot(_ == "text").map(col).toIndexedSeq ++ Seq(
+        Scoring.verifySet(col("tokh")).as("tok_set"), col("prefix"),
+        explode(Pipeline.blockKeys(col("tokh"), cfg)).as("block_key")): _*)
+
+  /** [[features]] under the hybrid Config these parameters describe;
+    * package-visible so [[graft.Verify]] can export the exact stream-side
+    * feature rows (tok_set, prefix, block_key) the q53 oracle replays.
     */
   private[graft] def docFeatures(docs: DataFrame, exactK: Int, lshShingleK: Int,
                                  numHashes: Int, bands: Int, winnowW: Int,
-                                 prefixChars: Int): DataFrame = {
-    val toks =
-      if (docs.columns.contains("tokens")) col("tokens")
-      else graft.functions.tokens(col("text"))
-    val prefix =
-      if (docs.columns.contains("text"))
-        substring(graft.functions.norm_text(col("text")), 1, prefixChars)
-      else substring(concat_ws(" ", col("tokens")), 1, prefixChars)
-    // same tokh-derived key family as blockKeys/blocksPayload (see
-    // blockKeys scaladoc); tok_set is the scoring verify set — identical
-    // values to Scoring.scorePairs' dedup'd tokh
-    val tokh = graft.functions.shingle_hashes(toks, 1, distinct = false)
-    val keys = array_union(
-      graft.functions.minhash_band_keys(tokh, lshShingleK, numHashes, bands),
-      graft.functions.winnowed_shingle_hashes(tokh, exactK, winnowW,
-        Blocking.ExactShingleSeed))
-    val base = docs.where(size(toks) > 0)
-      .withColumn("tok_set", graft.functions.shingle_hashes(toks, 1))
-      .withColumn("prefix", prefix)
-    base.select(
-      (base.columns.filterNot(Set("text", "tokens")).map(col) :+
-        explode(keys).as("block_key")).toIndexedSeq: _*)
-  }
+                                 prefixChars: Int): DataFrame =
+    features(docs, Pipeline.Config(shingleK = exactK, lshShingleK = lshShingleK,
+      numHashes = numHashes, bands = bands, winnowWindow = winnowW,
+      prefixChars = prefixChars))
 
   /** Build the static side of the stream-static join from a corpus
-    * snapshot (conv_id + text|tokens): (block_key, corpus_id,
-    * corpus_tok_set, corpus_prefix), with keys shared by more than
-    * `maxKeyFanout` corpus docs dropped (the batch cap's analog — a hot
-    * stopword-shingle key would fan every incoming doc out against
-    * thousands of corpus rows; recall rides the doc's other keys).
+    * snapshot (conv_id, text): (block_key, corpus_id, corpus_tok_set,
+    * corpus_prefix), with keys shared by more than `maxKeyFanout` corpus
+    * docs dropped (the batch cap's analog — a hot stopword-shingle key
+    * would fan every incoming doc out against thousands of corpus rows;
+    * recall rides the doc's other keys).
     * Persist (or write bucketed by block_key) before serving: a streaming
     * query re-evaluates an unpersisted static plan every micro-batch.
     */
-  def corpusIndex(corpus: DataFrame, exactK: Int = 3, lshShingleK: Int = 2,
-                  numHashes: Int = 96, bands: Int = 24, winnowW: Int = 8,
-                  maxKeyFanout: Int = 64, prefixChars: Int = 256): DataFrame = {
-    val feat = docFeatures(
-      corpus.select(col("conv_id").as("corpus_id"),
-        col(if (corpus.columns.contains("text")) "text" else "tokens")),
-      exactK, lshShingleK, numHashes, bands, winnowW, prefixChars)
+  def corpusIndex(corpus: DataFrame, cfg: Pipeline.Config = Pipeline.Config(),
+                  maxKeyFanout: Int = 64): DataFrame = {
+    val feat = features(corpus.select("conv_id", "text"), cfg)
+      .withColumnRenamed("conv_id", "corpus_id")
       .withColumnRenamed("tok_set", "corpus_tok_set")
       .withColumnRenamed("prefix", "corpus_prefix")
     val hot = feat.groupBy("block_key").agg(count(lit(1)).as("n"))
@@ -259,13 +225,13 @@ object IncrementalLink {
     feat.join(broadcast(hot.select("block_key")), Seq("block_key"), "left_anti")
   }
 
-  /** Link a stream of new docs (conv_id, ts, text|tokens) against a
-    * [[corpusIndex]]: stream-static join on block_key, watermarked
-    * candidate dedup (a pair sharing several keys is scored once per
-    * watermark window), then the batch scoring mixture inline
-    * (token-Jaccard + Jaro-Winkler + bounded-Levenshtein, identical
-    * kernels and weights to [[graft.pipeline.Scoring.scorePairs]]).
-    * Returns matches at `threshold` — append-mode, no retractions.
+  /** Link a stream of new docs (conv_id, ts, text) against a
+    * [[corpusIndex]] built under the same `cfg`: stream-static join on
+    * block_key, watermarked candidate dedup (a pair sharing several keys
+    * is scored once per watermark window), then the batch scoring kernels
+    * and [[graft.pipeline.Scoring.score]] mixture inline (token-Jaccard +
+    * Jaro-Winkler + bounded-Levenshtein under `cfg.weights`). Returns
+    * matches at `cfg.scoreThreshold` — append-mode, no retractions.
     *
     * Also runs in BATCH mode (a non-streaming `stream` input): the
     * watermark node is eliminated by the analyzer and the candidate dedup
@@ -276,13 +242,8 @@ object IncrementalLink {
     * serving-path semantics.
     */
   def linkAgainstCorpus(stream: DataFrame, index: DataFrame,
-                        w: graft.pipeline.Scoring.Weights =
-                          graft.pipeline.Scoring.Weights(),
-                        threshold: Double = 0.55, levMaxDist: Int = 128,
-                        watermark: String = "1 hour", exactK: Int = 3,
-                        lshShingleK: Int = 2, numHashes: Int = 96,
-                        bands: Int = 24, winnowW: Int = 8,
-                        prefixChars: Int = 256): DataFrame = {
+                        cfg: Pipeline.Config = Pipeline.Config(),
+                        watermark: String = "1 hour"): DataFrame = {
     // Plan shape note (measured round 6): the block-key join broadcasts
     // the (micro-batch-sized) stream side, so the fat corpus index is
     // scanned, never shuffled; the only payload-carrying shuffle is the
@@ -291,8 +252,7 @@ object IncrementalLink {
     // was tried and measured WORSE (3.5 → 4.8 s on the q53 gate): the
     // per-doc payload projection of the index costs its own full-index
     // dedup shuffle, which the current shape never pays.
-    val candidates = docFeatures(stream, exactK, lshShingleK, numHashes,
-      bands, winnowW, prefixChars)
+    val candidates = features(stream, cfg)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", watermark)
       .join(index, "block_key")
@@ -309,11 +269,9 @@ object IncrementalLink {
       .withColumn("jw",
         graft.functions.jaro_winkler(col("prefix"), col("corpus_prefix")))
       .withColumn("lev_sim", graft.functions.levenshtein_sim(
-        col("prefix"), col("corpus_prefix"), levMaxDist))
-      .withColumn("score",
-        lit(w.jaccard) * col("jaccard") + lit(w.jaroWinkler) * col("jw") +
-          lit(w.levenshtein) * col("lev_sim"))
-      .where(col("score") >= threshold)
+        col("prefix"), col("corpus_prefix"), cfg.levMaxDist))
+      .withColumn("score", Scoring.score(cfg.weights))
+      .where(col("score") >= cfg.scoreThreshold)
       .select(col("conv_id"), col("corpus_id"), col("ts"),
         col("jaccard"), col("jw"), col("lev_sim"), col("score"))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions._
+import graft.ReferenceForms._
 import org.apache.spark.sql.functions._
 
 class FunctionsSpec extends SparkSpec {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.Blocking
+import graft.pipeline.{Blocking, Pipeline, Scoring}
 import graft.streaming.IncrementalLink
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -25,21 +25,21 @@ class IncrementalLinkSpec extends SparkSpec {
       "solo2" -> "another disjoint snippet concerning orbital mechanics and fuel budgets")
   }
 
+  /** Docs as one-turn transcripts: the batch path's input, whose
+    * assembled doc text is each doc's own text.
+    */
+  private def batchDocs(docs: Seq[(String, String)]) =
+    Pipeline.docsPayload(docs.toDF("conv_id", "text").withColumn("turn_idx", lit(0)),
+      Pipeline.Config())
+
   test("streamed pairs == batch pipeline pairs; streaming keys JOIN the batch blocks snapshot") {
-    val batchDocs = corpus.toDF("conv_id", "text")
-      .withColumn("tokens", graft.functions.tokens(col("text")))
-    // the batch pipeline's docs payload for the same texts (the shape a
-    // production `docs` snapshot has — Pipeline.docsPayload fields)
-    val docsPayload = batchDocs.select(col("conv_id"),
-      graft.functions.shingle_hashes(col("tokens"), 1, distinct = false).as("tokh"),
-      xxhash64(col("conv_id")).as("hid"))
-    val batchBlocks = graft.pipeline.Pipeline
-      .blocksPayload(docsPayload, graft.pipeline.Pipeline.Config())
+    // the batch pipeline's docs and blocks snapshots for the same texts
+    val batchBlocks = Pipeline.blocksPayload(batchDocs(corpus), Pipeline.Config())
 
     // ADVICE r4: streaming keys must JOIN a batch blocks snapshot — exact
     // (block_key, member) multiset equality, member ids mapped via hid
     val streamKeys = IncrementalLink.blockKeys(
-        batchDocs.withColumn("ts", lit(ts(0))))
+        corpus.toDF("conv_id", "text").withColumn("ts", lit(ts(0))))
       .select(xxhash64(col("conv_id")).as("conv_id"), col("block_key"))
     assert(streamKeys.exceptAll(batchBlocks).isEmpty &&
       batchBlocks.exceptAll(streamKeys).isEmpty,
@@ -166,7 +166,7 @@ class IncrementalLinkSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, String, Timestamp)]
     val stream = in.toDF().toDF("conv_id", "text", "ts")
-    val q = IncrementalLink.linkAgainstCorpus(stream, index, threshold = 0.55)
+    val q = IncrementalLink.linkAgainstCorpus(stream, index)
       .writeStream.format("memory").queryName("ilcorp").outputMode("append").start()
     try {
       // two micro-batches; s1 appears in BOTH (watermarked dedup must
@@ -183,12 +183,8 @@ class IncrementalLinkSpec extends SparkSpec {
         s"got $matches")
 
       // score parity with the batch scorer on the same pairs
-      val allDocs = (corpusDocs ++ streamDocs).toDF("conv_id", "text")
-        .select(col("conv_id"),
-          graft.functions.tokens(col("text")).as("tokens"),
-          substring(graft.functions.norm_text(col("text")), 1, 256).as("prefix"))
       val pairs = matches.toDF("conv_a", "conv_b")
-      val batch = graft.pipeline.Scoring.scorePairs(pairs, allDocs)
+      val batch = Scoring.scorePairs(pairs, batchDocs(corpusDocs ++ streamDocs))
         .select(col("conv_a"), col("conv_b"), round(col("score"), 9).as("score"))
         .as[(String, String, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
       val streamed = got.select(col("conv_id"), col("corpus_id"),

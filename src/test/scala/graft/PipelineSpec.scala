@@ -158,6 +158,27 @@ class PipelineSpec extends SparkSpec {
       Seq(t, small).map(_.select("conv_id").distinct().count()))
   }
 
+  test("clusters and matched edges are independent of shuffle partitions and input order") {
+    // canonical forms: clusters as a set of member sets, edges as
+    // (smaller id, larger id, score)
+    def canon(r: Pipeline.StageResult) = (
+      r.clusters.groupBy("cluster_id").agg(collect_set("conv_id"))
+        .as[(String, Seq[String])].collect().map(_._2.toSet).toSet,
+      r.matchedEdges.select(least($"conv_a", $"conv_b"), greatest($"conv_a", $"conv_b"),
+        $"score").as[(String, String, Double)].collect().toSet)
+    val reordered = t.orderBy($"conv_id".desc, $"turn_idx".desc).repartition(7)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      val base = canon(Pipeline.run(t))
+      assert(base._2.nonEmpty && base._1.exists(_.size > 1)) // non-vacuous
+      for (n <- Seq(1, 7, 64); (name, input) <- Seq("as-is" -> t, "reordered" -> reordered)) {
+        spark.conf.set(key, n.toString)
+        assert(canon(Pipeline.run(input)) == base, s"$name input, $n shuffle partitions")
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
   test("checkpointed run resumes from snapshots and is byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val io = new ParquetTableIO(spark, dir)

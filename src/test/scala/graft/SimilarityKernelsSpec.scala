@@ -39,11 +39,4 @@ class SimilarityKernelsSpec extends AnyFunSuite {
       assert(a.isEmpty || jaroWinkler(a, a) == 1.0)
     }
   }
-
-  test("simhash64: identical inputs collide, disjoint inputs differ") {
-    val a = Array(1L, 2L, 3L, 99L)
-    assert(simhash64(a) == simhash64(a.clone()))
-    val b = Array(-7L, 1234567L, 42L)
-    assert(simhash64(a) != simhash64(b))
-  }
 }
