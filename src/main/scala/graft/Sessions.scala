@@ -19,7 +19,7 @@ object Sessions {
     "spark.sql.shuffle.partitions" -> "32",
     "spark.sql.files.maxPartitionBytes" -> (4 * MB).toString,
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (4 * MB).toString,
-    // blocking collect_set states are cap-bounded → hash agg, not the
+    // blocking's bounded-collect states are cap-bounded → hash agg, not the
     // default 128-entry sort-based fallback
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304"))
 

@@ -135,9 +135,10 @@ object SparkEntry {
         .where(col("n_docs").between(2, 64))),
 
     // ---- blocking: candidate pairs with cap (graft pairs stage) ----
-    // 2-exchange plan (Blocking.pairsFromBlocks): count → broadcast-anti
-    // hot keys → collect-per-block → native pair explode. The round-1
-    // 4-exchange self-join shape was the measured scaling bottleneck.
+    // 2-exchange plan (Blocking.pairsFromBlocks over the int64 doc_id):
+    // cap-bounded collect per block → native pair explode → pair dedup.
+    // The round-1 4-exchange self-join shape was the measured scaling
+    // bottleneck.
     "q12_candidate_pairs" -> ((s, d) => {
       val blocks = t(s, d, "documents")
         .select(col("doc_id").as("conv_id"),
@@ -234,8 +235,8 @@ object SparkEntry {
       Dedup.simhashPairs(t(s, d, "documents"), "doc_id", "text", 3, 64)),
 
     // ---- embedding cosine near-dup. rows-only: sign-bucket keys are
-    //      xxhash64-derived; OperatorsSpec pins emitted ⊆ exact cosine
-    //      pairs with value equality ----
+    //      xxhash64-derived; OperatorsSpec pins emitted == a scalar replay
+    //      of the oracle over the exported buckets, values equal ----
     "q23_emb_neardup" -> ((s, d) =>
       // the synthetic embeddings are near-orthogonal (max pairwise cosine
       // ≈ 0.48), so the "near-dup" band is calibrated to the top tail
@@ -732,7 +733,8 @@ object SparkEntry {
       // invariant because the metrics only COUNT keys and co-membership,
       // and shingle_hashes keys are distinct-per-doc hashes of exactly
       // the q11/q54-oracle string shingles (whole-doc fallback can't
-      // diverge — every fixture doc has ≥ 10 tokens; a 64-bit collision
+      // diverge — every fixture doc has ≥ 10 tokens, and OperatorsSpec
+      // asserts ≥ 3 on the gate's fixtures; a 64-bit collision
       // would merge two keys, the same accepted 2⁻⁶⁴-scale risk the
       // oracle-checked q12 carries). Skips materializing + shuffling the
       // shingle STRINGS, which dominated the round-5 q54 plan.

@@ -4,18 +4,12 @@ import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Bounded distinct-collect for pair generation (long ids).
-  *
-  * Replaces the two-pass hot-key protocol of `Blocking.pairsFromBlocks`
-  * (count aggregate over the whole block table → broadcast anti-join →
-  * unbounded `collect_set`) with ONE aggregation: the buffer keeps at most
+/** Bounded distinct-collect for pair generation (long ids), the one
+  * aggregation of `Blocking.pairsFromBlocks`: the buffer keeps at most
   * `cap + 1` distinct members — a block that reaches `cap + 1` is already
   * known oversize (the downstream filter drops it), so no state ever holds
-  * more than `cap + 1` longs even for a 100-TB hot key with millions of
-  * members (stopword shingles / dense LSH bands). Saves a full pass over
-  * the block table plus a broadcast barrier per run, and makes the
-  * aggregation state provably bounded — the property the old count-first
-  * pass existed to guarantee.
+  * more than `cap + 1` longs even for a hot key with millions of members
+  * (stopword shingles / dense LSH bands).
   *
   * The buffer is a sorted distinct primitive `Array[Long]`: reduce =
   * binary-search + copy-insert (saturates at cap + 1, then
@@ -23,15 +17,10 @@ import org.apache.spark.sql.functions.udaf
   * here: this aggregate runs once per (block_key) group — tens of millions
   * of groups per pipeline run with barely any map-side combining (a
   * block's members are scattered across doc-ordered input partitions), so
-  * the partial-buffer encoder runs per input row. `Array[Long]`
-  * serializes via the primitive-array fast path (no per-element boxing),
-  * where the previous `Vector[Long]` buffer boxed every element on every
-  * insert and every encode — the allocation behind the pairs map stage's
-  * 7.7% GC share in the round-4 event-log post-mortem (BASELINE.md; the
-  * interleaved A/B at 6.7M turns measured the swap within host noise —
-  * kept for the strictly lighter per-row allocation). Output order is
-  * ascending — callers that enumerate pairs need sorted members
-  * (canonical conv_a < conv_b).
+  * the partial-buffer encoder runs per input row, and `Array[Long]`
+  * serializes via the primitive-array fast path (no per-element boxing).
+  * Output order is ascending — callers that enumerate pairs need sorted
+  * members (canonical conv_a < conv_b).
   */
 class BoundedCollectSet(capPlusOne: Int)
     extends Aggregator[Long, Array[Long], Array[Long]] {

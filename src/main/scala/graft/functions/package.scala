@@ -140,8 +140,8 @@ package object functions {
     Internals.column(
       MinHashBandKeysExpr(Internals.expression(toks), shingleK, numHashes, bands))
 
-  /** All unordered (a < b) pairs of a member array — native codegen'd
-    * expression used by capped-block pair generation.
+  /** All unordered (a < b) pairs of an `array<bigint>` member array —
+    * native codegen'd expression used by capped-block pair generation.
     */
   def pair_combos(members: Column): Column =
     Internals.column(PairCombosExpr(Internals.expression(members)))

@@ -157,10 +157,6 @@ object Dedup {
       .select(col("conv_a").as("a"), col("conv_b").as("b"), col("hamming"))
   }
 
-  /** Embedding cosine near-dup pairs: random-hyperplane sign-bucket LSH
-    * (deterministic hash-derived hyperplanes, built-in exprs only), exact
-    * cosine verify inside buckets.
-    */
   /** Sign-bucket assignment (conv_id, block_key) — exposed for the
     * correctness gate's oracle export, like [[simhashSignatures]].
     */
@@ -169,19 +165,30 @@ object Dedup {
     emb.select(col(idCol).cast("string").as("conv_id"),
       signBucket(col(vecCol), signBits).as("block_key"))
 
+  /** Embedding cosine near-dup pairs (a, b, cosine), a < b as strings:
+    * random-hyperplane sign-bucket LSH (deterministic hash-derived
+    * hyperplanes, built-in exprs only), exact cosine verify inside buckets.
+    * Pairs are generated over xxhash64 of the string id; the two vec joins
+    * reattach the string ids, like `Scoring.scorePairs(pairIdCol = "hid")`.
+    */
   def embeddingCosinePairs(emb: DataFrame, idCol: String, vecCol: String,
                            signBits: Int, minCosine: Double, cap: Int): DataFrame = {
     val bucketed = signBuckets(emb, idCol, vecCol, signBits)
+      .select(xxhash64(col("conv_id")).as("conv_id"), col("block_key"))
     val (pairs, _) = Blocking.pairsFromBlocks(bucketed, cap)
-    val v = emb.select(col(idCol).cast("string").as("conv_id"), col(vecCol).as("vec"))
+    val v = emb.select(col(idCol).cast("string").as("id"), col(vecCol).as("vec"))
+    def side(s: String) =
+      v.select(xxhash64(col("id")).as(s"conv_$s"), col("id").as(s"id_$s"), col("vec").as(s"vec_$s"))
     val n = emb.sparkSession.sessionState.conf.numShufflePartitions
     pairs
-      .join(v.select(col("conv_id").as("conv_a"), col("vec").as("vec_a")), "conv_a")
-      .join(v.select(col("conv_id").as("conv_b"), col("vec").as("vec_b")), "conv_b")
+      .join(side("a"), "conv_a")
+      .join(side("b"), "conv_b")
       .repartition(n, col("conv_a"), col("conv_b")) // CPU-bound verify: keep it wide
       .withColumn("cosine", cosine_sim(col("vec_a"), col("vec_b")))
       .where(col("cosine") >= minCosine)
-      .select(col("conv_a").as("a"), col("conv_b").as("b"), col("cosine"))
+      // hid order is not string order: orient each pair as the string ids sort
+      .select(least(col("id_a"), col("id_b")).as("a"),
+        greatest(col("id_a"), col("id_b")).as("b"), col("cosine"))
   }
 
   /** Sign-bit bucket key: bit j = sign of ⟨vec, h_j⟩ where hyperplane

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.functions._
 
 /** Candidate-pair generation (blocking).
@@ -15,7 +16,7 @@ import graft.functions._
   * dense LSH bands) blow up pair counts quadratically, which AQE cannot fix
   * — AQE only re-splits shuffle partitions, it cannot stop a 1M-row block
   * from emitting 5·10^11 pairs. So blocks above `maxBlockSize` are dropped
-  * *before* the self-join, and the drop is surfaced in the returned
+  * *before* pair enumeration, and the drop is surfaced in the returned
   * metrics, never silent. Oversize-block recall is recovered by the other
   * bands (LSH uses `bands` independent keys per doc).
   */
@@ -57,104 +58,74 @@ object Blocking {
           .as("block_key"))
   }
 
-  /** Pairs from blocks with an explicit oversize cap.
-    * Returns (pairs(conv_a, conv_b, n_blocks), droppedBlocks metrics DF
-    * (block_key, block_size) — every dropped block is reported).
+  /** Pairs from blocks with an explicit oversize cap:
+    * blocks(block_key, conv_id: bigint) → (pairs(conv_a, conv_b, n_blocks),
+    * dropped(block_key, block_size)). Every dropped block is reported.
     *
-    * Plan shape: ONE shuffle to group members per key (lists bounded by the
-    * cap), pair enumeration inline on the ≤cap member arrays, one more
-    * shuffle to dedup pairs across blocks. The naive alternative — count
-    * keys, semi-join, self-join on block_key, dedup — costs 4-5 exchanges
-    * over the full block table and was the scaling bottleneck.
-    * conv_a < conv_b canonicalizes (members sorted before enumeration).
-    */
-  /** `shareAggregate`: lazily cache the fused path's bounded-collect
-    * aggregate so independent consumers of BOTH outputs (pairs + the drop
-    * audit) share one pass over the block table — wanted when both are
-    * materialized (TableIO's stage("pairs") + stage("dropped_blocks")),
-    * pure cache pressure when the audit is never read (the in-memory
-    * pipeline): the aggregate is the largest intermediate of the whole
-    * run, and pinning it steals executor storage from the scored-stage
-    * joins.
+    * One plan: a bounded distinct-collect ([[graft.functions.BoundedCollectSet]])
+    * groups members per key, keeping at most cap+1 of them, so a block
+    * that reaches cap+1 is known oversize without ever buffering a hot
+    * key's full membership; pairs are enumerated inline on the ≤cap sorted
+    * member arrays (conv_a < conv_b), then one more shuffle dedups pairs
+    * across blocks and counts the blocks each pair shares. A dropped
+    * block's `block_size` is cap+1, a LOWER BOUND: the audit needs the
+    * key, not the exact hot-key cardinality. Null ids are dropped.
+    *
+    * Ids must be `bigint` (the pipeline's `hid`, int64 table ids). Block
+    * other id types on `xxhash64(id)` and reattach the originals after
+    * pairing, as `Scoring.scorePairs(pairIdCol = "hid")` does.
+    *
+    * `shareAggregate`: lazily cache the bounded-collect aggregate so
+    * independent consumers of BOTH outputs (pairs + the drop audit) share
+    * one pass over the block table — wanted when both are materialized
+    * (TableIO's stage("pairs") + stage("dropped_blocks")), pure cache
+    * pressure when the audit is never read (the in-memory pipeline): the
+    * aggregate is the largest intermediate of the whole run, and pinning
+    * it steals executor storage from the scored-stage joins.
     */
   def pairsFromBlocks(blocks: DataFrame, maxBlockSize: Int,
                       shareAggregate: Boolean = false,
                       prePartition: Boolean = false): (DataFrame, DataFrame) = {
-    val longIds = blocks.schema("conv_id").dataType ==
-      org.apache.spark.sql.types.LongType
-    if (longIds) {
-      // ONE-pass path (long ids — the pipeline's hid keys): a bounded
-      // distinct-collect keeps at most cap+1 members per key, so a block
-      // that reaches cap+1 is known oversize without ever buffering a
-      // 100-TB hot key's full membership — the same state bound the old
-      // count-first protocol guaranteed, minus a full pass over the block
-      // table and a broadcast barrier. Oversize blocks report block_size
-      // = cap+1 as a LOWER BOUND (the drop audit needs the key, not the
-      // exact hot-key cardinality).
-      // null ids are dropped up front: BoundedCollectSet's primitive Long
-      // input encoder would coerce a null to 0 where the generic path's
-      // collect_set silently skips it — the filter makes both branches
-      // agree (pipeline hids from xxhash64 are never null, so this
-      // predicate is a free codegen'd guard, not a data pass).
-      val input = blocks.where(col("conv_id").isNotNull)
-      // `prePartition`: hash-partition the raw (block_key, conv_id) rows
-      // FIRST, so the bounded collect runs entirely post-shuffle and the
-      // exchange ships raw 16-byte rows with NO map-side partial
-      // aggregation. Why offer this: block keys are ~unique (round-5
-      // event logs: 47.5M exploded keys → 47.1M partial-agg output rows,
-      // <1% combined), so Spark's map-side ObjectHashAggregate builds a
-      // ~1.3M-entry hash map per map task that combines nothing — pure
-      // random-memory traffic, the dominant term of the pairs stage's
-      // 3× task-time inflation at 16 cores vs 4. Trade: a hot key's raw
-      // rows all cross the shuffle (map-side combine previously capped
-      // each map task's contribution at cap+1), so keep the DEFAULT path
-      // when hot-key byte amplification matters more than map-side
-      // memory traffic; aggregation STATE stays ≤ cap+1 either way
-      // (saturating reduce).
-      val grouped =
-        if (prePartition) {
-          val n = blocks.sparkSession.sessionState.conf.numShufflePartitions
-          input.repartition(n, col("block_key")).groupBy("block_key")
-        } else input.groupBy("block_key")
-      val agged0 = grouped
-        .agg(graft.functions.BoundedCollectSet
-          .bounded(maxBlockSize + 1, col("conv_id").cast("long")).as("members"))
-      // lazy + serialized: the pairs job both materializes and consumes it
-      // (no extra barrier), and the cached member arrays stay compact
-      val agged =
-        if (shareAggregate) agged0.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        else agged0
-      val kept = agged.where(size(col("members")).between(2, maxBlockSize))
-      val dropped = agged.where(size(col("members")) > maxBlockSize)
-        .select(col("block_key"),
-          size(col("members")).cast("long").as("block_size"))
-      val pairs = kept
-        .select(explode(pair_combos(col("members"))).as("p"))
-        .groupBy(col("p.conv_a").as("conv_a"), col("p.conv_b").as("conv_b"))
-        .agg(count(lit(1)).as("n_blocks"))
-      return (pairs, dropped)
-    }
-    // generic-id path (string ids — the standalone dedup operators and the
-    // oracle-checked q11/q12 demos): hot keys are identified from a light
-    // count aggregate (map-side partial agg → tiny shuffle of (key, long))
-    // and removed via a broadcast anti-join BEFORE collecting members —
-    // collect_set on an unbounded hot key would buffer millions of ids in
-    // one aggregation state at 100 TB
-    // lazy-checkpointed: the hot-key set is consumed twice (anti-join
-    // broadcast here, metrics materialization in the pipeline) and the
-    // count aggregate it derives from is a full pass over the block table —
-    // evaluating it once, not per consumer, is worth seconds per run
-    val dropped = blocks.groupBy("block_key")
-      .agg(count(lit(1)).as("block_size"))
-      .where(col("block_size") > maxBlockSize)
-      .localCheckpoint(false)
-    val filtered = blocks.join(
-      broadcast(dropped.select("block_key")), Seq("block_key"), "left_anti")
-    val kept = filtered.groupBy("block_key")
-      .agg(collect_set(col("conv_id")).as("members"))
-      .where(size(col("members")) >= 2)
-
+    val idType = blocks.schema("conv_id").dataType
+    require(idType == LongType,
+      s"pairsFromBlocks needs bigint conv_id, got ${idType.sql}: " +
+        "block on xxhash64(id) and reattach the ids after pairing")
+    // BoundedCollectSet's primitive Long input encoder would coerce a null
+    // to 0; pipeline hids from xxhash64 are never null, so this predicate
+    // is a free codegen'd guard, not a data pass
+    val input = blocks.where(col("conv_id").isNotNull)
+    // `prePartition`: hash-partition the raw (block_key, conv_id) rows
+    // FIRST, so the bounded collect runs entirely post-shuffle and the
+    // exchange ships raw 16-byte rows with NO map-side partial
+    // aggregation. Why offer this: block keys are ~unique (round-5
+    // event logs: 47.5M exploded keys → 47.1M partial-agg output rows,
+    // <1% combined), so Spark's map-side ObjectHashAggregate builds a
+    // ~1.3M-entry hash map per map task that combines nothing — pure
+    // random-memory traffic, the dominant term of the pairs stage's
+    // 3× task-time inflation at 16 cores vs 4. Trade: a hot key's raw
+    // rows all cross the shuffle (map-side combine previously capped
+    // each map task's contribution at cap+1), so keep the DEFAULT path
+    // when hot-key byte amplification matters more than map-side
+    // memory traffic; aggregation STATE stays ≤ cap+1 either way
+    // (saturating reduce).
+    val grouped =
+      if (prePartition) {
+        val n = blocks.sparkSession.sessionState.conf.numShufflePartitions
+        input.repartition(n, col("block_key")).groupBy("block_key")
+      } else input.groupBy("block_key")
+    val agged0 = grouped
+      .agg(graft.functions.BoundedCollectSet
+        .bounded(maxBlockSize + 1, col("conv_id")).as("members"))
+    // lazy + serialized: the pairs job both materializes and consumes it
+    // (no extra barrier), and the cached member arrays stay compact
+    val agged =
+      if (shareAggregate) agged0.localCheckpoint(false,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      else agged0
+    val kept = agged.where(size(col("members")).between(2, maxBlockSize))
+    val dropped = agged.where(size(col("members")) > maxBlockSize)
+      .select(col("block_key"),
+        size(col("members")).cast("long").as("block_size"))
     val pairs = kept
       .select(explode(pair_combos(col("members"))).as("p"))
       .groupBy(col("p.conv_a").as("conv_a"), col("p.conv_b").as("conv_b"))

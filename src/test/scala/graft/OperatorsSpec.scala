@@ -107,20 +107,77 @@ class OperatorsSpec extends SparkSpec {
     val sh22 = Dedup.simhashPairs(sf, "doc_id", "text", 3, 100000)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(sh22 == exactH)
-    // embedding cosine: emitted ⊆ exact pairs, values equal
+    // embedding cosine: emitted == the q23 oracle replayed over the same
+    // sign buckets, values equal — on the fixture and on planted twins
+    // whose string order differs from numeric order ("10" < "9"): pairs
+    // are generated over id hashes, yet must be oriented as the string
+    // ids sort. Twins share a vector; distinct twins are orthogonal.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val vecs = emb.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().toMap
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      if (na * nb == 0) 0.0 else dot / (na * nb)
+    val twins = Seq(9L -> 10L, 99L -> 100L, 7L -> 12L, 3L -> 21L, 8L -> 40L)
+    val planted = twins.zipWithIndex.flatMap { case ((x, y), g) =>
+      val v = Seq.tabulate(8)(d => if (d == g) 1.0f else 0.0f)
+      Seq(x -> v, y -> v)
+    }.toDF("vec_id", "embedding")
+    val strOrdered = twins.map { case (x, y) =>
+      val (s, t) = (x.toString, y.toString); if (s < t) (s, t) else (t, s) }
+    assert(q23Replay(planted).keySet == strOrdered.toSet)
+    for (input <- Seq(emb, planted)) {
+      val want = q23Replay(input)
+      assert(want.nonEmpty, "fixture must contain in-threshold pairs")
+      val ec = Dedup.embeddingCosinePairs(input, "vec_id", "embedding", 6, 0.25, 256)
+        .as[(String, String, Double)].collect()
+      assert(ec.length == want.size && ec.map(r => (r._1, r._2)).toSet == want.keySet)
+      ec.foreach { case (a, b, v) =>
+        assert(math.abs(want((a, b)) - v) < 1e-9, s"($a,$b) $v vs ${want((a, b))}")
+      }
     }
-    val ec = Dedup.embeddingCosinePairs(emb, "vec_id", "embedding", 6, 0.25, 256)
-      .as[(String, String, Double)].collect()
-    ec.foreach { case (a, b, v) =>
-      val exact = cos(vecs(a.toLong), vecs(b.toLong))
-      assert(exact >= 0.25 && math.abs(exact - v) < 1e-9, s"($a,$b) $v vs $exact")
+    // non-vacuous: at least one twin's hash order disagrees with its string order
+    val hid = planted.select($"vec_id".cast("string").as("id")).select($"id", xxhash64($"id"))
+      .as[(String, Long)].collect().toMap
+    assert(strOrdered.exists { case (a, b) => hid(a) > hid(b) })
+  }
+
+  private def cos(a: Seq[Float], b: Seq[Float]): Double = {
+    val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
+    val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
+    val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
+    if (na * nb == 0) 0.0 else dot / (na * nb)
+  }
+
+  /** The q23 oracle in plain Scala over `Dedup.signBuckets` rows (6 sign
+    * bits): buckets with more than 256 members are dropped, pairs a < b (as
+    * strings) share a kept bucket, cosine ≥ 0.25. (a, b) → cosine.
+    */
+  private def q23Replay(emb: org.apache.spark.sql.DataFrame): Map[(String, String), Double] = {
+    val vecs = emb.select($"vec_id".cast("string"), $"embedding")
+      .as[(String, Seq[Float])].collect().toMap
+    val buckets = Dedup.signBuckets(emb, "vec_id", "embedding", 6)
+      .as[(String, Long)].collect().groupBy(_._2).values.filter(_.length <= 256)
+    (for {
+      m <- buckets.toSeq; (a, _) <- m.toSeq; (b, _) <- m.toSeq
+      if a < b
+      c = cos(vecs(a), vecs(b)) if c >= 0.25
+    } yield (a, b) -> c).toMap
+  }
+
+  test("documents fixtures: every doc has >= 3 tokens (q12/q13/q15/q54 shingle parity)") {
+    // The q12/q13/q15/q54 oracles shingle with the SHINGLES macro, which
+    // gives a doc of fewer than 3 tokens one whole-doc shingle — "" for a
+    // zero-token doc — where the shingle_hashes kernel emits no key for a
+    // zero-token doc (empty docs stay unblockable). The four queries match
+    // their oracles only while no fixture doc is empty; the floor of 3 also
+    // keeps them off the whole-doc fallback. The fixture dirs are the ones
+    // TESTDATA.md lists (smoke, oracle gate, bench).
+    val testdata = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("TESTDATA.md")), "UTF-8")
+    val dirs = "`([^`]+/sf[0-9.]+)/`".r.findAllMatchIn(testdata).map(_.group(1)).toSeq
+    assert(dirs.size == 3, s"TESTDATA.md fixture dirs: $dirs")
+    for (dir <- dirs) {
+      val minTokens = spark.read.parquet(s"$dir/documents.parquet")
+        .select(min(size(tokens($"text")))).as[Int].head()
+      assert(minTokens >= 3, s"$dir has a doc with $minTokens tokens (< 3): " +
+        "q12_candidate_pairs, q13_pair_scores, q15_neardup_jaccard and q54_blocking_metrics " +
+        "shingle it by the whole-doc fallback, and diverge from their oracles on a zero-token doc")
     }
   }
 

@@ -52,47 +52,59 @@ class PipelineSpec extends SparkSpec {
     assert(r.f1 >= 0.99, r.toString)
   }
 
+  /** `Blocking.pairsFromBlocks` output as sets: (conv_a, conv_b) → n_blocks
+    * and dropped block_key → block_size.
+    */
+  private def pairsOf(blocks: org.apache.spark.sql.DataFrame, cap: Int,
+                      prePartition: Boolean = false) = {
+    val (pairs, dropped) = Blocking.pairsFromBlocks(blocks, cap, prePartition = prePartition)
+    (pairs.select("conv_a", "conv_b", "n_blocks").as[(Long, Long, Long)].collect()
+      .map { case (a, b, n) => (a, b) -> n }.toMap,
+      dropped.select("block_key", "block_size").as[(Long, Long)].collect().toMap)
+  }
+
+  /** Plain-Scala pair generation over collected (block_key, id) rows: null
+    * ids are skipped, keys with more than `cap` distinct members are
+    * dropped, kept keys enumerate their a < b pairs, and each pair counts
+    * the kept keys it shares. Returns (pairs → n_blocks, dropped keys).
+    */
+  private def referencePairs(rows: Seq[(Long, Option[Long])], cap: Int) = {
+    val members = rows.collect { case (k, Some(id)) => (k, id) }
+      .groupBy(_._1).map { case (k, kv) => k -> kv.map(_._2).distinct.sorted }
+    val dropped = members.collect { case (k, m) if m.size > cap => k }.toSet
+    val pairs = members.values.filter(_.size <= cap).toSeq
+      .flatMap(m => for (i <- m.indices; j <- i + 1 until m.size) yield (m(i), m(j)))
+      .groupBy(identity).map { case (p, occ) => p -> occ.size.toLong }
+    (pairs, dropped)
+  }
+
+  /** The exact-shingle block table over 64-bit conversation hids. */
+  private def hidBlocks(transcripts: org.apache.spark.sql.DataFrame, k: Int) =
+    Blocking.exactShingleBlocks(DocAssembly.assemble(transcripts), k)
+      .select(col("block_key"), xxhash64(col("conv_id")).as("conv_id"))
+
   test("hot blocks are capped and the drop is reported, not silent") {
     // tiny cap forces stopword-shingle blocks over the cap
-    val blocks = Blocking.exactShingleBlocks(DocAssembly.assemble(t), 1)
-    val (pairs, dropped) = Blocking.pairsFromBlocks(blocks, maxBlockSize = 10)
+    val (pairs, dropped) = Blocking.pairsFromBlocks(hidBlocks(t, 1), maxBlockSize = 10)
     assert(dropped.count() > 0)
     val maxPairKey = pairs.groupBy().agg(max("n_blocks")).as[Long].head()
     assert(maxPairKey > 0)
   }
 
-  test("fused long-id pair path ≡ generic path (pairs equal, drops detected, state bounded)") {
-    // same block table under both id types: long ids take the one-pass
-    // bounded-collect plan, string ids the count+anti-join plan — pair
-    // sets must be identical and every dropped key must appear in both
-    val strBlocks = Blocking.exactShingleBlocks(DocAssembly.assemble(t), 1)
-    val longBlocks = strBlocks.select(col("block_key"),
-      xxhash64(col("conv_id")).as("conv_id"))
-    val (pGen, dGen) = Blocking.pairsFromBlocks(strBlocks, maxBlockSize = 10)
-    val (pFus, dFus) = Blocking.pairsFromBlocks(longBlocks, maxBlockSize = 10)
-    // compare pair sets through the same hashing
-    val gen = pGen.select(xxhash64(col("conv_a")).as("a"), xxhash64(col("conv_b")).as("b"),
-      col("n_blocks")).as[(Long, Long, Long)].collect()
-      .map { case (a, b, n) => (math.min(a, b), math.max(a, b), n) }.toSet
-    val fus = pFus.select(col("conv_a"), col("conv_b"), col("n_blocks"))
-      .as[(Long, Long, Long)].collect()
-      .map { case (a, b, n) => (math.min(a, b), math.max(a, b), n) }.toSet
-    assert(gen == fus)
+  test("bounded-collect pair path ≡ scalar reference (pairs equal, drops detected, state bounded)") {
+    val blocks = hidBlocks(t, 1)
+    val (wantPairs, wantDropped) = referencePairs(
+      blocks.select("block_key", "conv_id").as[(Long, Option[Long])].collect().toSeq, 10)
+    val (fus, dFus) = pairsOf(blocks, 10)
+    assert(wantDropped.nonEmpty && wantPairs.nonEmpty)
+    assert(fus == wantPairs)
     // the prePartition plan shape (raw-shuffle-then-aggregate, no map-side
     // partial agg) must be a pure physical rewrite: identical pairs AND
     // identical drop audit
-    val (pPre, dPre) =
-      Blocking.pairsFromBlocks(longBlocks, maxBlockSize = 10, prePartition = true)
-    val pre = pPre.select(col("conv_a"), col("conv_b"), col("n_blocks"))
-      .as[(Long, Long, Long)].collect()
-      .map { case (a, b, n) => (math.min(a, b), math.max(a, b), n) }.toSet
-    assert(pre == fus)
-    assert(dPre.select("block_key").as[Long].collect().toSet ==
-      dFus.select("block_key").as[Long].collect().toSet)
-    // same dropped keys; fused sizes are the documented cap+1 lower bound
-    assert(dGen.select("block_key").as[Long].collect().toSet ==
-      dFus.select("block_key").as[Long].collect().toSet)
-    assert(dFus.select("block_size").as[Long].collect().forall(_ == 11L))
+    assert(pairsOf(blocks, 10, prePartition = true) == ((fus, dFus)))
+    // same dropped keys; sizes are the documented cap+1 lower bound
+    assert(dFus.keySet == wantDropped)
+    assert(dFus.values.forall(_ == 11L))
     // the aggregator's state bound: saturates at cap+1 distinct, dedups
     val agg = new graft.functions.BoundedCollectSet(4)
     val r = (1L to 100L).foldLeft(agg.zero)((b, v) => agg.reduce(agg.reduce(b, v), v))
@@ -102,6 +114,46 @@ class PipelineSpec extends SparkSpec {
     // merge stays bounded + sorted-distinct from arbitrary partials
     val m2 = agg.merge(Array(1L, 2L, 3L), Array(4L, 5L, 6L, 7L))
     assert(m2.toSeq == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("pair generation on degenerate block tables matches the scalar reference") {
+    val cap = 3
+    val oneDoc = hidBlocks(t.where($"conv_id" === t.select(min("conv_id")).as[String].head()), 3)
+      .select("block_key", "conv_id").as[(Long, Option[Long])].collect().toSeq
+    val cases = Seq(
+      "empty block table" -> Seq.empty[(Long, Option[Long])],
+      "one doc" -> oneDoc,
+      // key 1: three rows, two distinct ids — kept at cap 3, one pair, no
+      // self-pair; key 2: one id twice — a singleton, no pair
+      "duplicate (block_key, id) rows" -> Seq(1L -> Some(10L), 1L -> Some(10L),
+        1L -> Some(11L), 2L -> Some(10L), 2L -> Some(10L), 1L -> Some(11L)),
+      // nulls neither pair nor count toward the cap
+      "null ids" -> Seq(3L -> None, 3L -> Some(20L), 3L -> None, 3L -> Some(21L),
+        3L -> Some(22L), 4L -> None),
+      // key 5 holds exactly cap members (kept), key 6 cap + 1 (dropped),
+      // key 7 ten (dropped, reported as cap + 1)
+      "keys at cap and above" -> ((30L to 32L).map(id => 5L -> Some(id)) ++
+        (30L to 33L).map(id => 6L -> Some(id)) ++ (40L to 49L).map(id => 7L -> Some(id))))
+    for ((name, rows) <- cases) {
+      val (wantPairs, wantDropped) = referencePairs(rows, cap)
+      val blocks = rows.toDF("block_key", "conv_id")
+      for (pre <- Seq(false, true)) {
+        val (pairs, dropped) = pairsOf(blocks, cap, prePartition = pre)
+        assert(pairs == wantPairs, s"$name (prePartition=$pre)")
+        assert(dropped.keySet == wantDropped, s"$name (prePartition=$pre)")
+        assert(dropped.values.forall(_ == cap + 1L), s"$name (prePartition=$pre)")
+      }
+    }
+    assert(oneDoc.nonEmpty)
+    val (atCap, overCap) = referencePairs(cases.toMap.apply("keys at cap and above"), cap)
+    assert(atCap.size == 3 && overCap == Set(6L, 7L))
+    // ids that are not bigint are refused when the plan is built
+    for (ids <- Seq(Seq(("k", "a"), ("k", "b")).toDF("block_key", "conv_id"),
+                    Seq((1L, 1), (1L, 2)).toDF("block_key", "conv_id"))) {
+      val e = intercept[IllegalArgumentException](Blocking.pairsFromBlocks(ids, cap))
+      assert(e.getMessage.contains(ids.schema("conv_id").dataType.sql) &&
+        e.getMessage.contains("xxhash64"), e.getMessage)
+    }
   }
 
   test("threshold-aware string-kernel prune: matched set identical, hopeless pairs skip the kernels") {
