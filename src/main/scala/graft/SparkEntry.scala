@@ -404,14 +404,8 @@ object SparkEntry {
     "q37_facc_features" -> ((s, d) => {
       val docs = t(s, d, "documents")
       // facc feeds the pair self-join (twice), the frequency dim and the
-      // and_freq join: one materialization instead of five tokenize
-      // passes. Per-doc dedup happens map-side (array_distinct before the
-      // explode), so the index build needs no global dedup shuffle —
-      // identical rows (doc_id keys per-doc-distinct entities)
-      val facc = shared(Features.faccIndex(
-        docs.select(col("doc_id"),
-          explode(array_distinct(toks(col("text")))).as("entity")),
-        rowsDistinct = true))
+      // and_freq join: one materialization instead of five tokenize passes
+      val facc = shared(Features.faccIndex(docs, toks(col("text"))))
       val numDocs = docs.count()
       // candidate pairs from actual co-occurrence (facc self-join on
       // doc_id) — what a real caller feeds the operator. The round-2
@@ -503,13 +497,8 @@ object SparkEntry {
     "q44_facc_set_features" -> ((s, d) => {
       val docs = t(s, d, "documents")
       // faccSetFeatures consumes facc in three branches (ef, perDoc, the
-      // or/and counts): one materialization of the tokenize pass. Per-doc
-      // dedup is map-side (array_distinct before explode) — no global
-      // dedup shuffle, identical rows (see q37)
-      val facc = shared(Features.faccIndex(
-        docs.select(col("doc_id"),
-          explode(array_distinct(toks(col("text")))).as("entity")),
-        rowsDistinct = true))
+      // or/and counts): one materialization of the tokenize pass
+      val facc = shared(Features.faccIndex(docs, toks(col("text"))))
       val numDocs = docs.count()
       // deterministic 3-entity sets: the 3 lexicographically-smallest
       // distinct tokens of every 17th document

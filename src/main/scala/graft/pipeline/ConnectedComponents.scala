@@ -2,26 +2,40 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
-/** Iterative large-star / small-star connected components
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  * SoCC'14) on plain DataFrames — no GraphX/GraphFrames dependency.
+/** Connected components over string ids: one entry point,
+  * [[ConnectedComponents.runWithUniverse]], from undirected match edges
+  * (src, dst) and an id universe (conv_id) to one (conv_id, cluster_id)
+  * row per universe row; cluster id = the min conv_id of its component.
   *
   * Reference analog: greedy interpretation-set formation
   * (nordlys/erd/isf/greedy.py:22-97) — sequential first-fit grouping is a
-  * serial union-find; large/small-star is its scalable replacement
-  * (converges in O(log n) rounds, each round two shuffles).
+  * serial union-find; here small edge sets close on a driver union-find
+  * and large ones run iterative large-star / small-star rounds
+  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC'14; converges in O(log n) rounds, each round two shuffles) on
+  * plain DataFrames — no GraphX/GraphFrames dependency.
   *
-  * Node ids are the conv_id *strings* (lexicographic total order). Hashing
-  * to longs would risk collisions at 10^12 rows; string shuffle keys cost a
-  * little more bandwidth but are collision-free and keep cluster ids
-  * human-readable (cluster id = min conv_id of the component).
+  * Ids are `conv_id` *strings* (lexicographic total order), and every
+  * other type is refused at plan build. Hashing to longs would risk
+  * collisions at 10^12 rows; string shuffle keys cost a little more
+  * bandwidth but are collision-free and keep cluster ids human-readable.
   *
-  * Every iteration is materialized through `checkpoint` — in production a
-  * TableIO snapshot (cuts lineage, enables resume-from-round-k), in tests
-  * `localCheckpoint`. Convergence = stable (count, hash-sum) fingerprint of
-  * the edge set: one cheap aggregate per round instead of a set-difference
-  * join.
+  * Three output shapes, each selected by an observed size:
+  *  - blob attach: edges ≤ `localMaxEdges` and non-root nodes ≤
+  *    `maxBroadcastNodes` — driver union-find, then a broadcast byte-blob
+  *    lookup projected over the universe (no join, no shuffle);
+  *  - join attach: edges ≤ `localMaxEdges`, more non-root nodes — the same
+  *    union-find, its assignment re-shipped through `parallelize` and
+  *    left-joined to the universe;
+  *  - distributed rounds: edges > `localMaxEdges` (0 forces them) —
+  *    large/small-star rounds, each materialized through `checkpoint`
+  *    (`localCheckpoint` by default, a TableIO table in checkpointed
+  *    pipeline runs), then the same left-join attach. Convergence = stable
+  *    (count, bit-xor hash) fingerprint of the edge set: one cheap
+  *    aggregate per round instead of a set-difference join.
+  * All three give identical rows (ConnectedComponentsSpec pins it).
   */
 object ConnectedComponents {
 
@@ -36,70 +50,54 @@ object ConnectedComponents {
   def defaultLocalMaxEdges: Long =
     math.min(16000000L, math.max(1000000L, Runtime.getRuntime.maxMemory() / 2048))
 
-  /** Past this many NODES the resolved component map is no longer
-    * broadcast for the map-side attach (a 4M-entry string map is
+  /** Past this many non-root NODES the resolved component map is no
+    * longer broadcast for the map-side attach (a 4M-entry string map is
     * ~400-500 MB serialized per executor); larger assignments re-ship
-    * through parallelize + a shuffled join instead. Package-visible so
-    * the boundary parity test can exercise the join-attach fallback
-    * without a 4M-node fixture.
+    * through parallelize + a shuffled join instead.
     */
-  private[pipeline] val MaxBroadcastNodes = 4000000
+  private val MaxBroadcastNodes = 4000000
 
-  /** edges(src, dst) undirected, self-loops ignored →
-    * assignment(conv_id, cluster_id); only nodes appearing in edges are
-    * returned (callers attach singletons with coalesce, or use
-    * [[runWithUniverse]] which folds the attach into the finisher).
+  /** Round cap of the distributed path; it converges in O(log n) rounds. */
+  private val MaxIter = 50
+
+  /** edges(src, dst) undirected, self-loops ignored, endpoints outside
+    * `universe` not emitted; every row of `universe(conv_id)` gets a
+    * cluster_id (its component's min member, or itself when unlinked).
+    * All three id columns must be strings (IllegalArgumentException at
+    * plan build otherwise).
     *
-    * `localMaxEdges` > 0 enables the hybrid finisher: when the distinct
+    * `localMaxEdges` > 0 enables the driver finisher: when the canonical
     * edge set fits under the bound, the components are closed with a
     * driver-side union-find instead of O(log n) distributed rounds — the
     * iterative tail is pure per-round scheduler latency once edges are
     * small, and "small" here is millions while the upstream stages are the
-    * ones that scale with the lake. Identical output (cluster id = min
-    * member, exactly the star-forest convention); 0 disables (default, and
-    * the TableIO resume path keeps per-round snapshots).
-    */
-  def run(edges: DataFrame,
-          // lazy localCheckpoint: the round's fingerprint aggregate is the
-          // action that materializes it, so each round costs ONE job, not
-          // two — the per-round driver latency is the serial floor of the
-          // whole pipeline once the data stages scale out
-          checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),
-          maxIter: Int = 50,
-          onRound: (Int, Long, Long) => Unit = (_, _, _) => (),
-          localMaxEdges: Long = 0L,
-          edgesDistinct: Boolean = false,
-          // a caller-supplied upper bound on the canonical edge count
-          // (e.g. observed during the scoring stage's own materialization
-          // job) lets the finisher guard skip its count() pass entirely —
-          // canonicalize only ever drops rows, so any pre-filter row count
-          // is a safe over-estimate for the `<= localMaxEdges` check
-          knownEdgeCount: Option[Long] = None): DataFrame = {
-    val e = canonicalize(edges, checkpoint, edgesDistinct)
-    if (useLocalFinisher(e, localMaxEdges, knownEdgeCount)) {
-      assignmentDf(e.sparkSession,
-        streamingCollectUnion(e).resolved(keepRoots = true))
-    } else distributedAssignment(
-      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, maxIter, onRound)
-  }
-
-  /** CC + singleton attach in one operator: every id in
-    * `universe(conv_id)` gets a cluster_id (its component's min member, or
-    * itself when unlinked). On the driver-finisher path the attach is a
-    * broadcast-map lookup — a narrow projection over `universe`, no join,
-    * no shuffle — which removes the separate shuffled singleton-attach
-    * join that was the pipeline's serial tail (VERDICT r3 §perf). The
-    * distributed path (edge set over the bound, or non-string ids) keeps
-    * the left-join + coalesce attach.
+    * ones that scale with the lake. 0 (the default) always runs the
+    * rounds; the object doc lists the attach each path takes.
+    *
+    * `checkpoint(df, round)` materializes each distributed round (and,
+    * with round -1, the deduplicated edge set). Its default is a lazy
+    * localCheckpoint: the round's fingerprint aggregate is the action that
+    * materializes it, so each round costs ONE job, not two — the per-round
+    * driver latency is the serial floor of the whole pipeline once the
+    * data stages scale out.
+    *
+    * `edgesDistinct`: the caller vouches the edges hold no duplicate
+    * unordered pair (skips the canonical `distinct()` on the finisher
+    * path). `knownEdgeCount`: a caller-supplied upper bound on the
+    * canonical edge count (e.g. observed during the scoring stage's own
+    * materialization job) lets the finisher guard skip its count() pass —
+    * canonicalize only ever drops rows, so any pre-filter row count is a
+    * safe over-estimate for the `<= localMaxEdges` check.
     */
   def runWithUniverse(edges: DataFrame, universe: DataFrame,
                       checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),
-                      maxIter: Int = 50,
                       onRound: (Int, Long, Long) => Unit = (_, _, _) => (),
                       localMaxEdges: Long = 0L,
                       edgesDistinct: Boolean = false,
                       knownEdgeCount: Option[Long] = None,
                       maxBroadcastNodes: Int = MaxBroadcastNodes): DataFrame = {
+    requireString(edges, "src"); requireString(edges, "dst")
+    requireString(universe, "conv_id")
     val spark = edges.sparkSession
     val e = canonicalize(edges, checkpoint, edgesDistinct)
     if (useLocalFinisher(e, localMaxEdges, knownEdgeCount)) {
@@ -128,9 +126,16 @@ object ConnectedComponents {
         // re-executing the lookup across plan branches
         universe.select(col("conv_id"),
           look(col("conv_id")).as("cluster_id"))
-      } else joinAttach(universe, assignmentDf(spark, uf.resolved(keepRoots = false)))
+      } else joinAttach(universe, assignmentDf(spark, uf.resolved()))
     } else joinAttach(universe, distributedAssignment(
-      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, maxIter, onRound))
+      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, onRound))
+  }
+
+  private def requireString(df: DataFrame, column: String): Unit = {
+    val t = df.schema(column).dataType
+    if (t != StringType) throw new IllegalArgumentException(
+      s"ConnectedComponents needs string $column, got ${t.sql}: " +
+        "cluster on the conv_id strings")
   }
 
   /** Broadcast-blob lookup closure: resolves the decoded map once per
@@ -257,18 +262,9 @@ object ConnectedComponents {
                              edgesDistinct: Boolean): DataFrame =
     if (edgesDistinct) checkpoint(e.distinct(), -1) else e
 
-  /** The driver finisher reads ids as strings; non-string ids (valid for
-    * the distributed path, which only needs an ordering) fall through to
-    * the iterative rounds rather than risking a ClassCastException or a
-    * lexicographic-vs-native ordering divergence.
-    */
   private def useLocalFinisher(e: DataFrame, localMaxEdges: Long,
-                               knownEdgeCount: Option[Long] = None): Boolean = {
-    val stringIds = e.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.StringType)
-    localMaxEdges > 0 && stringIds &&
-      knownEdgeCount.getOrElse(e.count()) <= localMaxEdges
-  }
+                               knownEdgeCount: Option[Long]): Boolean =
+    localMaxEdges > 0 && knownEdgeCount.getOrElse(e.count()) <= localMaxEdges
 
   /** Incremental union-find with path compression, min member as the
     * representative — byte-identical clustering to the star-forest
@@ -335,18 +331,15 @@ object ConnectedComponents {
       n
     }
 
-    /** node → final root. `keepRoots = false` omits root self-entries —
-      * correct wherever the consumer falls back to identity for absent
-      * keys (both of [[runWithUniverse]]'s attach paths); [[run]] keeps
-      * them because its contract is "every node appearing in edges is
-      * returned".
+    /** non-root node → final root. Roots are omitted: both attach paths
+      * fall back to identity for absent keys.
       */
-    def resolved(keepRoots: Boolean): java.util.HashMap[String, String] = {
+    def resolved(): java.util.HashMap[String, String] = {
       val out = new java.util.HashMap[String, String](count)
       var i = 0
       while (i < count) {
         val r = find(i)
-        if (keepRoots || r != i) out.put(names(i), names(r))
+        if (r != i) out.put(names(i), names(r))
         i += 1
       }
       out
@@ -404,19 +397,16 @@ object ConnectedComponents {
                            resolved: java.util.HashMap[String, String]): DataFrame = {
     val out = new scala.collection.mutable.ArrayBuffer[(String, String)](resolved.size())
     resolved.forEach((k, v) => out += ((k, v)))
-    import spark.implicits._
-    // small assignments ride back as a LocalRelation (size stats known →
-    // a downstream attach join can broadcast); past ~1M nodes a
-    // LocalRelation is a plan-embedded monster serialized with every task,
-    // so ship the rows once through parallelize instead (the attach join
-    // then shuffles — correct at that size). Round 3 measured the two
-    // tempting "fixes" and both lose: broadcast-hinting the parallelize DF
+    // reached only past maxBroadcastNodes non-root nodes, where a
+    // LocalRelation would be a plan-embedded monster serialized with every
+    // task: ship the rows once through parallelize (the attach join then
+    // shuffles — correct at that size). Round 3 measured the two tempting
+    // "fixes" and both lose: broadcast-hinting the parallelize DF
     // round-trips every row driver → executors → driver (+2 s), and a
     // broadcast-hinted multi-million-row LocalRelation costs ~10 s in
     // driver-side encode + double plan serialization — the plain shuffled
     // attach join is the fastest measured shape at this size.
-    if (out.size <= 1000000) out.toSeq.toDF("conv_id", "cluster_id")
-    else spark.createDataFrame(
+    spark.createDataFrame(
       spark.sparkContext.parallelize(out.toSeq,
         math.max(spark.sparkContext.defaultParallelism, 8)))
       .toDF("conv_id", "cluster_id")
@@ -425,13 +415,12 @@ object ConnectedComponents {
   /** The distributed large/small-star rounds + star-forest readout. */
   private def distributedAssignment(e0: DataFrame,
                                     checkpoint: (DataFrame, Int) => DataFrame,
-                                    maxIter: Int,
                                     onRound: (Int, Long, Long) => Unit): DataFrame = {
     var e = e0
     var fingerprint = (-1L, -1L)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       e = checkpoint(smallStar(largeStar(e)), iter)
       // order-independent fingerprint; bit_xor can't overflow (edge set is distinct)
       val row = e.agg(count(lit(1)), coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
@@ -441,7 +430,7 @@ object ConnectedComponents {
       fingerprint = fp
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
+    require(converged, s"connected components did not converge in $MaxIter rounds")
 
     // final graph is a forest of stars: cluster = min over closed neighborhood
     val sym = e.select(col("u"), col("v"))

@@ -286,26 +286,27 @@ object Pipeline {
 
     val clusters = stage("clusters") {
       val checkpointFn: (DataFrame, Int) => DataFrame = io match {
-        // one table per round (resume-from-round-k; round 1 overwrote a
-        // single "cc_round" table, making documented resume impossible)
+        // distributed rounds only (edges over the bound): each round is
+        // written and read back as its own table, which cuts the round's
+        // lineage; no re-run reads them (resume reuses whole-stage
+        // snapshots only)
         case Some(t) => (df, i) => { t.write(df, s"cc_round_$i"); t.read(s"cc_round_$i") }
         // lazy: the CC round's own fingerprint aggregate materializes it —
         // one job per round instead of two (driver latency is CC's floor)
         case None => (df, _) => df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       }
-      // hybrid finisher on the in-memory path: when the match-edge set is
-      // under the heap-derived bound (~4M at an 8 GB driver), close
-      // components with a driver union-find — the distributed rounds'
-      // per-round latency is the pipeline's serial floor, and millions of
-      // edges are noise next to the upstream stages that actually scale
-      // with the lake. Singleton attach is folded INTO the finisher
-      // (broadcast-map lookup over docs — no shuffled join; VERDICT r3
-      // "clusters is the scaling floor"). TableIO mode keeps the
-      // per-round snapshots (documented resume-from-round-k).
+      // driver finisher in both modes: when the match-edge set is under
+      // the heap-derived bound (~4M at an 8 GB driver), close components
+      // with a driver union-find — the distributed rounds' per-round
+      // latency is the pipeline's serial floor, and millions of edges are
+      // noise next to the upstream stages that actually scale with the
+      // lake. Singleton attach is folded INTO the finisher (broadcast-map
+      // lookup over docs — no shuffled join; VERDICT r3 "clusters is the
+      // scaling floor"). The finisher and the rounds give identical
+      // clusters, so a TableIO run's snapshot equals an in-memory run's.
       ConnectedComponents.runWithUniverse(edges, docs.select(col("conv_id")),
         checkpointFn,
-        localMaxEdges =
-          if (io.isEmpty) ConnectedComponents.defaultLocalMaxEdges else 0L,
+        localMaxEdges = ConnectedComponents.defaultLocalMaxEdges,
         // pair-dedup upstream guarantees distinct pairs → the finisher
         // path skips CC's own distinct() shuffle entirely
         edgesDistinct = true,

@@ -2,12 +2,46 @@ package graft
 
 import graft.pipeline.ConnectedComponents
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
+
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The edge endpoints as a universe: every node that appears in an edge. */
+  private def endpoints(df: DataFrame): DataFrame =
+    df.select($"src".as("conv_id")).union(df.select($"dst".as("conv_id"))).distinct()
+
+  private def collectMap(df: DataFrame): Map[String, String] =
+    df.as[(String, String)].collect().toMap
+
   private def cc(edges: Seq[(String, String)]): Map[String, String] = {
     val df = edges.toDF("src", "dst")
-    ConnectedComponents.run(df).as[(String, String)].collect().toMap
+    collectMap(ConnectedComponents.runWithUniverse(df, endpoints(df)))
+  }
+
+  /** The three output shapes, each with the plan it must take: rounds run
+    * (or not) and a join attach (or the blob lookup). `maxBroadcastNodes`
+    * = -1 sends even a root-only assignment to the join attach.
+    */
+  private case class Shape(name: String, localMaxEdges: Long, maxBroadcastNodes: Int,
+                           rounds: Boolean, join: Boolean)
+  private val shapes = Seq(
+    Shape("blob attach", 1000000L, 4000000, rounds = false, join = false),
+    Shape("join attach", 1000000L, -1, rounds = false, join = true),
+    Shape("rounds", 0L, 4000000, rounds = true, join = true))
+
+  /** Runs one shape and checks it took its own path; returns all rows. */
+  private def runShape(shape: Shape, edges: DataFrame,
+                       universe: DataFrame): Seq[(String, String)] = {
+    var rounds = 0
+    val out = ConnectedComponents.runWithUniverse(edges, universe,
+      onRound = (_, _, _) => rounds += 1, localMaxEdges = shape.localMaxEdges,
+      maxBroadcastNodes = shape.maxBroadcastNodes)
+    val hasJoin = out.queryExecution.analyzed.collect { case j: Join => j }.nonEmpty
+    assert(hasJoin == shape.join, s"${shape.name}: join attach = $hasJoin")
+    assert((rounds > 0) == shape.rounds, s"${shape.name}: $rounds rounds")
+    out.as[(String, String)].collect().toSeq
   }
 
   test("chain collapses to one component rooted at min id") {
@@ -30,7 +64,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("matches a union-find oracle on a seeded random graph") {
     val rnd = new scala.util.Random(7)
     val n = 200
-    val ids = (0 until n).map(i => f"n$i%04d")
+    // the two lonely ids and any n id no edge touches are singletons
+    val ids = (0 until n).map(i => f"n$i%04d") ++ Seq("lonely1", "lonely2")
     val edges = (0 until 300).map { _ =>
       (ids(rnd.nextInt(n)), ids(rnd.nextInt(n)))
     }.filter { case (a, b) => a != b }
@@ -51,9 +86,35 @@ class ConnectedComponentsSpec extends SparkSpec {
       val m = members.min; members.map(_ -> m)
     }
 
-    val got = cc(edges)
-    val touched = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    touched.foreach { id => assert(got(id) == byRoot(id), s"node $id") }
+    val edgeDf = edges.toDF("src", "dst")
+    val universe = ids.toDF("conv_id")
+    assert(ids.size > edges.flatMap(e => Seq(e._1, e._2)).distinct.size)
+    for (shape <- shapes) {
+      val got = runShape(shape, edgeDf, universe)
+      assert(got.size == ids.size, s"${shape.name}: one row per universe id")
+      val m = got.toMap
+      ids.foreach { id => assert(m(id) == byRoot(id), s"${shape.name}: node $id") }
+    }
+  }
+
+  test("degenerate inputs on every shape: empty edges or universe, outside endpoints, duplicate ids") {
+    val noEdges = Seq.empty[(String, String)].toDF("src", "dst")
+    val edges = Seq("b" -> "a", "c" -> "b", "y" -> "x").toDF("src", "dst")
+    val universe = Seq("a", "b", "c", "z").toDF("conv_id")
+    for (shape <- shapes) {
+      // no edges: every id is its own cluster
+      assert(runShape(shape, noEdges, universe).sorted ==
+        Seq("a" -> "a", "b" -> "b", "c" -> "c", "z" -> "z"), shape.name)
+      // empty universe: empty output
+      assert(runShape(shape, edges, Seq.empty[String].toDF("conv_id")).isEmpty, shape.name)
+      // x and y are edge endpoints outside the universe: no row for them
+      assert(runShape(shape, edges, universe).sorted ==
+        Seq("a" -> "a", "b" -> "a", "c" -> "a", "z" -> "z"), shape.name)
+      // duplicate universe rows: one output row each
+      val dup = Seq("a", "b", "b", "z", "z", "z").toDF("conv_id")
+      assert(runShape(shape, edges, dup).sorted ==
+        Seq("a" -> "a", "b" -> "a", "b" -> "a", "z" -> "z", "z" -> "z", "z" -> "z"), shape.name)
+    }
   }
 
   test("hybrid driver union-find finisher ≡ distributed rounds (random graphs)") {
@@ -63,10 +124,9 @@ class ConnectedComponentsSpec extends SparkSpec {
       val ids = (0 until n).map(i => f"n$i%04d")
       val edges = (0 until 180).map(_ => (ids(rnd.nextInt(n)), ids(rnd.nextInt(n))))
       val df = edges.toDF("src", "dst")
-      val distributed = ConnectedComponents.run(df)
-        .as[(String, String)].collect().toMap
-      val hybrid = ConnectedComponents.run(df, localMaxEdges = 1000000L)
-        .as[(String, String)].collect().toMap
+      val distributed = collectMap(ConnectedComponents.runWithUniverse(df, endpoints(df)))
+      val hybrid = collectMap(ConnectedComponents.runWithUniverse(df, endpoints(df),
+        localMaxEdges = 1000000L))
       assert(hybrid == distributed, s"seed=$seed")
     }
   }
@@ -83,8 +143,8 @@ class ConnectedComponentsSpec extends SparkSpec {
 
     def runCounting(bound: Long): (Map[String, String], Int) = {
       var rounds = 0
-      val m = ConnectedComponents.run(df, localMaxEdges = bound,
-        onRound = (_, _, _) => rounds += 1).as[(String, String)].collect().toMap
+      val m = collectMap(ConnectedComponents.runWithUniverse(df, endpoints(df),
+        localMaxEdges = bound, onRound = (_, _, _) => rounds += 1))
       (m, rounds)
     }
     val (local, localRounds) = runCounting(canonical.size.toLong)
@@ -157,21 +217,26 @@ class ConnectedComponentsSpec extends SparkSpec {
       .filter { case (a, b) => a != b }
       .map { case (a, b) => if (a < b) (a, b) else (b, a) }.distinct
     val df = distinctEdges.toDF("src", "dst")
-    val base = ConnectedComponents.run(df).as[(String, String)].collect().toMap
+    val base = collectMap(ConnectedComponents.runWithUniverse(df, endpoints(df)))
     for (bound <- Seq(0L, 1000000L)) { // distributed and finisher paths
-      val got = ConnectedComponents.run(df, localMaxEdges = bound,
-        edgesDistinct = true).as[(String, String)].collect().toMap
+      val got = collectMap(ConnectedComponents.runWithUniverse(df, endpoints(df),
+        localMaxEdges = bound, edgesDistinct = true))
       assert(got == base, s"bound=$bound")
     }
   }
 
-  test("numeric ids under localMaxEdges fall back to distributed rounds (no driver cast crash)") {
-    val df = Seq((3L, 1L), (1L, 2L), (10L, 20L)).toDF("src", "dst")
-    // round 2 threw ClassCastException in the driver finisher (getString on
-    // LongType); now non-string ids skip the finisher and still converge
-    val m = ConnectedComponents.run(df, localMaxEdges = 1000000L)
-      .as[(Long, Long)].collect().toMap
-    assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 20L -> 10L))
+  test("non-string ids are refused at plan build, naming column and type") {
+    val strEdges = Seq("b" -> "a").toDF("src", "dst")
+    val strUniverse = Seq("a", "b").toDF("conv_id")
+    val cases = Seq(
+      ("src", Seq((3L, 1L)).toDF("src", "dst"), strUniverse),
+      ("dst", Seq(("c", 1L)).toDF("src", "dst"), strUniverse),
+      ("conv_id", strEdges, Seq(1L, 2L).toDF("conv_id")))
+    for ((column, edges, universe) <- cases; bound <- Seq(0L, 1000000L)) {
+      val e = intercept[IllegalArgumentException](
+        ConnectedComponents.runWithUniverse(edges, universe, localMaxEdges = bound))
+      assert(e.getMessage.contains(s"string $column, got BIGINT"), e.getMessage)
+    }
   }
 
   test("finisher blob cache: a reused broadcast id never serves another blob's map") {

@@ -160,24 +160,30 @@ class OperatorsSpec extends SparkSpec {
     } yield (a, b) -> c).toMap
   }
 
-  test("documents fixtures: every doc has >= 3 tokens (q12/q13/q15/q54 shingle parity)") {
+  test("documents fixtures: >= 3 tokens, unique doc_id (q12/q13/q15/q54, q37/q44)") {
     // The q12/q13/q15/q54 oracles shingle with the SHINGLES macro, which
     // gives a doc of fewer than 3 tokens one whole-doc shingle — "" for a
     // zero-token doc — where the shingle_hashes kernel emits no key for a
     // zero-token doc (empty docs stay unblockable). The four queries match
     // their oracles only while no fixture doc is empty; the floor of 3 also
-    // keeps them off the whole-doc fallback. The fixture dirs are the ones
+    // keeps them off the whole-doc fallback. Features.faccIndex (q37/q44)
+    // dedups entities per doc row, so it equals the oracles' global dedup
+    // only while doc_id is unique. The fixture dirs are the ones
     // TESTDATA.md lists (smoke, oracle gate, bench).
     val testdata = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("TESTDATA.md")), "UTF-8")
     val dirs = "`([^`]+/sf[0-9.]+)/`".r.findAllMatchIn(testdata).map(_.group(1)).toSeq
     assert(dirs.size == 3, s"TESTDATA.md fixture dirs: $dirs")
     for (dir <- dirs) {
-      val minTokens = spark.read.parquet(s"$dir/documents.parquet")
-        .select(min(size(tokens($"text")))).as[Int].head()
+      val (minTokens, docs, ids) = spark.read.parquet(s"$dir/documents.parquet")
+        .select(min(size(tokens($"text"))), count(lit(1)), countDistinct($"doc_id"))
+        .as[(Int, Long, Long)].head()
       assert(minTokens >= 3, s"$dir has a doc with $minTokens tokens (< 3): " +
         "q12_candidate_pairs, q13_pair_scores, q15_neardup_jaccard and q54_blocking_metrics " +
         "shingle it by the whole-doc fallback, and diverge from their oracles on a zero-token doc")
+      assert(ids == docs, s"$dir has $docs docs but $ids distinct doc_ids: " +
+        "q37_facc_features and q44_facc_set_features count a repeated doc_id once per row " +
+        "in and_freq/or_freq, where their oracles dedup globally")
     }
   }
 

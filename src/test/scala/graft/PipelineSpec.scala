@@ -235,11 +235,27 @@ class PipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val io = new ParquetTableIO(spark, dir)
     val cfg = Pipeline.Config(blocking = Pipeline.ExactBlocking, maxBlockSize = 500)
-    val first = Pipeline.runCheckpointed(t, cfg, io).clusters.orderBy("conv_id").collect()
+    def rows(r: Pipeline.StageResult) = (
+      r.clusters.orderBy("conv_id").collect().toSeq,
+      r.matchedEdges.orderBy("conv_a", "conv_b").collect().toSeq)
+    val firstRun = Pipeline.runCheckpointed(t, cfg, io)
+    val first = rows(firstRun)
     // second run must reuse every stage snapshot (resume) and match exactly
-    val second = Pipeline.runCheckpointed(t, cfg, io).clusters.orderBy("conv_id").collect()
-    assert(first.sameElements(second))
+    val second = rows(Pipeline.runCheckpointed(t, cfg, io))
+    assert(first == second)
     assert(io.exists("clusters") && io.exists("edges") && io.exists("docs"))
     assert(io.readMetrics().nonEmpty)
+    // the snapshots hold what an in-memory run on the same input returns
+    val inMemory = rows(Pipeline.run(t, cfg))
+    assert(first._1 == inMemory._1, "TableIO clusters differ from Pipeline.run's")
+    assert(first._2 == inMemory._2, "TableIO matched edges differ from Pipeline.run's")
+    // under the finisher's edge bound the components close on the driver,
+    // as in memory: no distributed round is written
+    val edges = firstRun.matchedEdges.count()
+    assert(edges > 0 && edges <= ConnectedComponents.defaultLocalMaxEdges, s"$edges edges")
+    val rounds = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.startsWith("cc_round_"))
+    assert(rounds.isEmpty, s"round tables under the edge bound: $rounds")
   }
 }
